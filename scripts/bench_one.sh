@@ -22,7 +22,6 @@ T0=$(date +%s)
 SPARK_GRAFT_CHILD=1 SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_OUT="$OUT" \
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_TRIALS="$TRIALS" SPARK_GRAFT_CPUS="$CPUS" \
 timeout -k 10 "$TMO" java $ADD_OPENS -Xmx"$XMX" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
   > /tmp/bench_one.log 2>&1
 CODE=$?

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: one JSON line with per-query seconds on
   * SPARK_GRAFT_SF_DIR.
@@ -75,23 +75,7 @@ object Bench {
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt
     val outPath = sys.env("SPARK_GRAFT_OUT")
     val only = sys.env("SPARK_GRAFT_ONLY").split(",").toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Optional wide-start shuffle: SPARK_GRAFT_INIT_PARTITIONS lets a
-      // big-SF probe start shuffles wide (billion-row candidate exchanges
-      // get ~64 MB tasks) and have AQE coalesce small stages down — the
-      // production sizing story. Default = cpus: measured at sf0.1/sf1,
-      // a wide start costs sub-second queries ~1 s of fixed scheduling
-      // overhead, which swamps the tiny-SF bench.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.contains(n) }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite (SURVEY §2.C) over `documents`.
@@ -512,6 +512,10 @@ object DedupQueries {
   // (graft.functions.GramCodeArrayExpr) and the per-pair step is a
   // codegen'd sorted merge — no per-pair string hash sets; Jaccard
   // values are exactly the string-gram values.
+  /** `doc_id`'s bucket among `width`-id ranges, by integral division:
+    * exact at any id, where a double division rounds ids above 2⁵³. */
+  private[graft] def idBucket(width: Long): Column = expr(s"doc_id DIV $width")
+
   /** Shared skeleton for C4/C8: every bounded-offset pair
     * (id_a, id_b = id_a + off, off ∈ 1..maxOff, both present) with the
     * sorted-merge gram-intersection count and both set sizes.
@@ -540,7 +544,7 @@ object DedupQueries {
     val gramCodes = GraftBridge.column(
       graft.functions.GramCodeArrayExpr(GraftBridge.expression(col("text")), 3))
     val grams = docs(s, dir).select(col("doc_id"), gramCodes.as("g"))
-      .withColumn("bk", (col("doc_id") / lit(B)).cast("long"))
+      .withColumn("bk", idBucket(B))
       .withColumn("cp", lit(false))
     val lookahead = grams
       .filter(pmod(col("doc_id"), lit(B)) < maxOff && col("bk") > 0)
@@ -1403,7 +1407,7 @@ object DedupQueries {
     val docFrame = feat
       .withColumn("bh", bhExpr)
       .select(col("doc_id"), col("ps"), col("bh"))
-      .withColumn("bk", (col("doc_id") / lit(B)).cast("long"))
+      .withColumn("bk", idBucket(B))
       .withColumn("cp", lit(false))
     val lookahead = docFrame
       .filter(pmod(col("doc_id"), lit(B)) < windowW && col("bk") > 0)

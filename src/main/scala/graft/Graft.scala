@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Library entrypoint: one call gives a session with the whole graft
-  * surface wired — the native as-of strategy and optimizer rule, every
+  * surface wired — the native as-of strategy and optimizer rules, every
   * `graft_*` SQL function, and the session defaults the suite is tuned
   * for. Users switching from the reference start here:
   *
@@ -13,8 +13,12 @@ import org.apache.spark.sql.SparkSession
   * spark.sql("SELECT graft_hll(user_id) FROM events")
   * }}}
   *
-  * For a session built elsewhere (e.g. by a platform), [[install]]
-  * retrofits the same surface.
+  * Every session in this repo comes from [[session]]: the oracle gate,
+  * the bench, the profilers, the specs and the probes differ only in
+  * master URL and app name. For a session built elsewhere (e.g. by a
+  * platform), [[install]] retrofits the same surface, and
+  * `spark.sql.extensions=graft.plans.GraftExtensions` registers it at
+  * build time.
   */
 object Graft {
 
@@ -22,43 +26,32 @@ object Graft {
     * streaming tier (G7-G15, ECS ingestion) should run on at real key
     * cardinality: per-key point reads/writes hit RocksDB instead of an
     * all-keys-in-heap HashMap, so state size is bounded by disk, not
-    * executor memory.
+    * executor memory. Opt in per session:
+    * `spark.conf.set("spark.sql.streaming.stateStore.providerClass", Graft.RocksDbProvider)`.
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Build a session with graft extensions + tuned defaults.
-    * `shufflePartitions` defaults to the machine's core count locally;
-    * set it to 2-3× total executor cores on a real cluster.
-    * `rocksDbStateStore` switches stateful streaming to the RocksDB
-    * provider (recommended once keyed state outgrows executor heap).
+  /** Get or create the session at `master` with the graft surface
+    * installed and these SQL settings: UTC session time zone, AQE on,
+    * parquet TIMESTAMP(NANOS) read as longs, and one shuffle partition
+    * per default-parallelism slot (the core count locally; on a
+    * cluster, the executor cores registered by then). The settings are
+    * applied after `getOrCreate`, so a call that returns a live session
+    * re-applies them too.
     */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      appName: String = "graft",
-      shufflePartitions: Option[Int] = None,
-      rocksDbStateStore: Boolean = false): SparkSession = {
-    val parts = shufflePartitions.getOrElse(Runtime.getRuntime.availableProcessors())
+      appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(Tables.NanosAsLongKey, "true")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // extensions only apply to newly-built sessions; a pre-existing
-    // session returned by getOrCreate still needs the registry path
-    install(s)
-    // getOrCreate silently ignores builder configs on a pre-existing
-    // session — re-apply the mutable, semantics-affecting ones so the
-    // tuned defaults this docstring promises actually hold
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s.conf.set(Tables.NanosAsLongKey, "true")
-    if (rocksDbStateStore)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
+    s.conf.set("spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toString)
+    install(s)
     s
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries so the
   * shuffle/broadcast/pushdown story can be audited (SURVEY §4).
   * Usage: runMain graft.PlanAudit [sfDir] [query ...]
@@ -22,12 +20,7 @@ object PlanAudit {
       "q53_interpolate", "q54_scd2", "q55_funnel", "knn_mmr",
       "text_hash_features", "pipeline_pagerank", "sketch_hll_rolling",
       "src_compact_small_files", "mm_png_decode", "ecs_flocking")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[8]", "graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

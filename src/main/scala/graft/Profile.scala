@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiler: `runMain graft.Profile <sfDir> <query...>`.
   * Runs each named query once warm (sf0.001) then 3 timed trials
   * through a noop sink (full materialization — `.count()` lets
@@ -12,13 +10,7 @@ object Profile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("dedup_minhash_lsh", "dedup_simhash", "dedup_cluster")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[32]", "graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
     def exhaust(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.IvfIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,12 +35,7 @@ object AnnAssignBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("ann-assign-bench")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[8]", "ann-assign-bench")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val k = kOf(args)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.AsOfJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Targeted A/B for the AsOfJoinExec merge loop at a row count where
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object AsOfCodegenBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("asof-codegen-bench")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[8]", "asof-codegen-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     val nLeft = 20000000L

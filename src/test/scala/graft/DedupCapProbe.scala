@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-cap curves for the dedup tier's bounded pools (VERDICT
@@ -27,13 +27,7 @@ object DedupCapProbe {
     val dir = args.headOption.getOrElse("target/sf1")
     val caps = Seq(16, 32, 64, 128, 256, 512, 1024)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
 
     def curve(name: String, pairsOf: Int => DataFrame): Seq[(Int, Long, Double)] = {

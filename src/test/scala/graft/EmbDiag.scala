@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Throwaway phase timer for dedup_embedding's decade-4 shape:
@@ -12,13 +11,7 @@ object EmbDiag {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.expressions.Window

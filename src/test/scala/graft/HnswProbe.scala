@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc phase profiler for knn_hnsw at an arbitrary SF dir:
@@ -12,13 +11,7 @@ object HnswProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -62,4 +62,29 @@ class KeyMagnitudeSpec extends SparkSpec {
       assert(BigInt(reduced) == raw, s"id=$id: $reduced != $raw")
     }
   }
+
+  test("id buckets are exact above 2^53: 2^53 + 16383 sits in bucket 2^39, offset 16383") {
+    // as a double, 2^53 + 16383 rounds up to 2^53 + 16384, so a
+    // floating-point division puts the id one bucket too far
+    val B = 1L << 14
+    val id = (1L << 53) + 16383L
+    val row = spark.range(1).select(lit(id).as("doc_id"))
+      .select(DedupQueries.idBucket(B), pmod(col("doc_id"), lit(B)))
+      .head()
+    assert(row.getLong(0) == (1L << 39))
+    assert(row.getLong(1) == 16383L)
+  }
+
+  test("bounded-offset pairs straddling 2^53 + 16384 stay in one bucket") {
+    // 2^53 + 16382 and 2^53 + 16383 are one id apart in bucket 2^39; a
+    // bucket id one too high for the second id drops the pair
+    val base = (1L << 53) + 16382L
+    val dir = Files.createTempDirectory("graft_bucket53").toString
+    import spark.implicits._
+    Seq((base, "the same short text"), (base + 1, "the same short text"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val pairs = DedupQueries.boundedOffsetIntersects(spark, dir)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    assert(pairs == Seq((base, base + 1)))
+  }
 }

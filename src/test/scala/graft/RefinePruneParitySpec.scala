@@ -23,11 +23,23 @@ class RefinePruneParitySpec extends SparkSpec {
         dim = 64, bucketCap = 64)
       .localCheckpoint(true)
 
+    // the single post-union distinct in refineOnce dedups (qid, nid)
+    // only while both sides score a pair bit-identically: pin it
+    def onePerPair(r: org.apache.spark.sql.DataFrame, label: String): Unit = {
+      val dups = r.groupBy(col("qid"), col("nid")).count()
+        .filter(col("count") > 1).count()
+      assert(dups == 0, s"$label: $dups (qid, nid) pairs repeat")
+    }
+
     def rounds(prune: Boolean): Array[Seq[Any]] = {
       val r1 = graft.operators.RandomHyperplaneLsh
         .refineOnce(base, e, "vec_id", "v", k = 3, prune = prune)
+        .localCheckpoint(true)
+      onePerPair(r1, s"round 1, prune=$prune")
       val r2 = graft.operators.RandomHyperplaneLsh
         .refineOnce(r1, e, "vec_id", "v", k = 3, prune = prune)
+        .localCheckpoint(true)
+      onePerPair(r2, s"round 2, prune=$prune")
       r2.select(col("qid"), col("rn"), col("nid"),
           (round(col("cos"), 4) + lit(0.0)).as("cos"))
         .orderBy(col("qid"), col("rn")).collect().map(_.toSeq)

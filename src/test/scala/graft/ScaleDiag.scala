@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main for the C3/C5 sf10 investigations: prints the
@@ -28,13 +28,7 @@ object ScaleDiag {
     val dir = args(0)
     val what = if (args.length > 1) args(1) else "both"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
 
     if (what == "simhash" || what == "both") {

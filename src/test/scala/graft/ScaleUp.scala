@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-scale dataset (10× sf0.1) for the scaling probe.
@@ -52,16 +52,10 @@ object ScaleUp {
     val Array(srcDir, outDir, factorStr) = args.take(3)
     val factor = factorStr.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS): read it as raw longs (exactly as
-      // Tables.load does) and write it back as BIGINT — `ts DIV 1000`
-      // conversion downstream handles both encodings
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session reads events.ts TIMESTAMP(NANOS) as raw longs
+    // (exactly as Tables.load does) and writes it back as BIGINT —
+    // `ts DIV 1000` conversion downstream handles both encodings
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
 
     def replicated(table: String, df: DataFrame): DataFrame =

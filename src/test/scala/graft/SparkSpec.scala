@@ -11,14 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("local[4]", "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }
