@@ -21,12 +21,14 @@ import scala.jdk.CollectionConverters._
   * Spark-first design, NOT a port:
   *  - Each archetype table is an append-only DataFrame carrying an
   *    internal commit-version column `_v`. Upsert = pure append
-  *    (shuffle-free at write); latest-wins resolution happens at read
-  *    with one window over the merge keys (merge-on-read). This is how
-  *    the same semantics stay cheap on a 1000-executor cluster: writes
-  *    never rewrite history, and `optimize()` compacts (materializes the
-  *    resolved view and cuts lineage) — the analogue of the reference's
-  *    `table.optimize()`.
+  *    (shuffle-free at write). While every append landed at a step the
+  *    archetype did not hold yet, no (entity_id, step) key can repeat
+  *    and reads return the log as is; once an append may have
+  *    rewritten a key, latest-wins resolution happens at read with one
+  *    window over the merge keys (merge-on-read). This is how the same
+  *    semantics stay cheap on a 1000-executor cluster: writes never
+  *    rewrite history, and `optimize()` cuts the log's lineage — the
+  *    analogue of the reference's `table.optimize()`.
   *  - Persistence is parquet partitioned by (simulation, run), so a
   *    cluster-scale store partition-prunes on exactly the keys every
   *    query filters on. `step` arrives sorted within files, so parquet
@@ -51,7 +53,7 @@ final class ArchetypeStore(
   import ArchetypeStore._
 
   private val sigByHash = mutable.LinkedHashMap.empty[String, Seq[ComponentMeta]]
-  private val tables = mutable.LinkedHashMap.empty[String, DataFrame]
+  private val tables = mutable.LinkedHashMap.empty[String, Log]
   private val pending = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Row]]
   private val entitySig = mutable.HashMap.empty[Long, String]
   private val entityCounter = new AtomicLong(0L)
@@ -70,8 +72,8 @@ final class ArchetypeStore(
     if (!sigByHash.contains(hash)) {
       sigByHash(hash) = Archetype.signature(metas)
       val schema = withVersion(Archetype.schemaOf(metas))
-      tables(hash) = spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), schema)
+      tables(hash) = Log(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), schema), Some(Set.empty))
     }
     hash
   }
@@ -118,20 +120,14 @@ final class ArchetypeStore(
   }
 
   /** Bulk spawn: `df` must carry `entity_id` plus the prefixed component
-    * columns of `metas`. The distributed path — no driver loop.
+    * columns of `metas`. The distributed path — no driver loop. `df`
+    * holds at most one row per `entity_id` (see [[upsert]]).
     */
-  def spawnBatch(metas: Seq[ComponentMeta], df: DataFrame, step: Long): Unit = {
-    val hash = ensureTable(metas)
-    val schema = Archetype.schemaOf(metas)
-    val prepared = df
+  def spawnBatch(metas: Seq[ComponentMeta], df: DataFrame, step: Long): Unit =
+    upsertAt(ensureTable(metas), df
       .withColumn("simulation", lit(simulation))
       .withColumn("run", lit(run))
-      .withColumn("step", lit(step))
-      .withColumn("is_active", lit(true))
-      .withColumn(VersionCol, lit(commitCounter.incrementAndGet()))
-      .select(schema.fieldNames.map(col).toIndexedSeq :+ col(VersionCol): _*)
-    append(hash, prepared)
-  }
+      .withColumn("is_active", lit(true)), step)
 
   /** Soft-delete: mark is_active=false for this entity at `step`
     * (reference: store.py:160-170).
@@ -147,7 +143,9 @@ final class ArchetypeStore(
     * (matching rows re-stamped `is_active = false` under a fresh
     * version) rather than rewriting history in place — latest-wins
     * resolves them identically, and the append-only contract is what
-    * lets `commitDelta` persist despawns incrementally.
+    * lets `commitDelta` persist despawns incrementally. A tombstone
+    * repeats a live key, so the archetype's reads go through the
+    * latest-wins window from then on.
     */
   def despawnWhere(hash: String, cond: org.apache.spark.sql.Column): Unit = {
     flush()
@@ -157,13 +155,11 @@ final class ArchetypeStore(
     // state doesn't (and resolution over a cond-filtered subset could
     // crown a stale version whose newer non-matching sibling was
     // filtered out).
-    val scope = col("simulation") === simulation && col("run") === run
-    val tombstones = ArchetypeStore
-      .latestWinsKeepVersion(tables(hash).filter(scope))
+    val tombstones = resolveKeepVersion(tables(hash), runScope)
       .filter(col("is_active") && cond)
       .withColumn("is_active", lit(false))
       .withColumn(VersionCol, lit(commitCounter.incrementAndGet()))
-    tables(hash) = tables(hash).unionByName(tombstones)
+    put(hash, tombstones, None)
   }
 
   /** Archetype MIGRATION — add/remove components on live entities
@@ -191,9 +187,7 @@ final class ArchetypeStore(
     // state, never a superseded version: a stale upserted version that
     // happens to match cond must neither tombstone a live frame whose
     // current state doesn't match, nor migrate with stale values.
-    val scope = col("simulation") === simulation && col("run") === run
-    val live = ArchetypeStore
-      .latestWinsKeepVersion(tables(fromHash).filter(scope))
+    val live = resolveKeepVersion(tables(fromHash), runScope)
       .filter(col("is_active"))
     // An entity migrates iff its LATEST live frame matches cond, and it
     // moves with that frame — an older frame that matches while the
@@ -231,9 +225,7 @@ final class ArchetypeStore(
     val host = sigByHash.collectFirst {
       case (hash, sig) if sig.exists(_.name == meta.name) &&
         sig.size > 1 &&
-        !ArchetypeStore.latestWinsKeepVersion(
-          tables(hash).filter(col("simulation") === simulation &&
-            col("run") === run && col("entity_id") === entityId))
+        !resolveKeepVersion(tables(hash), runScope && col("entity_id") === entityId)
           .filter(col("is_active")).isEmpty => (hash, sig)
     }
     val (hash, sig) = host.getOrElse(sys.error(
@@ -267,9 +259,7 @@ final class ArchetypeStore(
   /** Latest-wins resolved view of one archetype, scoped to (sim, run). */
   def resolved(hash: String): DataFrame = {
     flush()
-    val df = tables(hash)
-      .filter(col("simulation") === simulation && col("run") === run)
-    latestWins(df)
+    resolveKeepVersion(tables(hash), runScope).drop(VersionCol)
   }
 
   def getArchetypes(metas: Seq[ComponentMeta]): Map[String, DataFrame] =
@@ -281,11 +271,9 @@ final class ArchetypeStore(
     */
   def getHistory(metas: Seq[ComponentMeta], includeAllRuns: Boolean = false): Map[String, DataFrame] = {
     flush()
+    val scope = if (includeAllRuns) col("simulation") === simulation else runScope
     matchingHashes(metas).map { h =>
-      val scoped =
-        if (includeAllRuns) tables(h).filter(col("simulation") === simulation)
-        else tables(h).filter(col("simulation") === simulation && col("run") === run)
-      h -> latestWins(scoped)
+      h -> resolveKeepVersion(tables(h), scope).drop(VersionCol)
     }.toMap
   }
 
@@ -295,22 +283,37 @@ final class ArchetypeStore(
 
   /** Merge-insert keyed on (simulation, run, entity_id, step)
     * (reference: store.py:250-256): implemented as version-stamped
-    * append; the read path resolves latest-wins.
+    * append; the read path resolves latest-wins. One append carries at
+    * most one row per (entity_id, step): two such rows share one `_v`,
+    * so which of them a read returns is unspecified. The store cannot
+    * tell which steps `df` touches, so the archetype's reads resolve
+    * through the latest-wins window from here on; [[upsertAt]] keeps
+    * them window-free.
     */
-  def upsert(hash: String, df: DataFrame): Unit = {
+  def upsert(hash: String, df: DataFrame): Unit = appendVersioned(hash, df, None)
+
+  /** [[upsert]] of one step's frame: every row of `df` is stamped
+    * `step`. While the archetype holds no row at `step` yet, no key can
+    * repeat, and its reads keep skipping the latest-wins window.
+    */
+  def upsertAt(hash: String, df: DataFrame, step: Long): Unit =
+    appendVersioned(hash, df.withColumn("step", lit(step)), Some(step))
+
+  private def appendVersioned(hash: String, df: DataFrame, step: Option[Long]): Unit = {
     flush()
     val schema = Archetype.schemaOf(sigByHash(hash))
     val prepared = df
       .withColumn(VersionCol, lit(commitCounter.incrementAndGet()))
       .select(schema.fieldNames.map(col).toIndexedSeq :+ col(VersionCol): _*)
-    append(hash, prepared)
+    put(hash, prepared, step.map(Set(_)))
   }
 
   /** Plain append (reference: store.py:258-261 `update`). */
   def appendRows(hash: String, df: DataFrame): Unit = upsert(hash, df)
 
-  /** Compact: materialize resolved state, cut lineage (the analogue of
-    * LanceDB `table.optimize()`). Call every few steps in a long loop.
+  /** Compact: checkpoint each archetype's raw append log (every
+    * version, not the resolved view) and cut its lineage (the analogue
+    * of LanceDB `table.optimize()`). Call every few steps in a long loop.
     * The previous compaction's checkpoint blocks are released once the
     * new one materializes, so long simulations hold at most one
     * snapshot per archetype.
@@ -329,10 +332,12 @@ final class ArchetypeStore(
         "reliableCheckpoints requires SparkContext.setCheckpointDir")
     tables.keys.toSeq.foreach { h =>
       val old = checkpointed.get(h)
-      tables(h) =
-        if (reliableCheckpoints) tables(h).checkpoint(eager = true)
-        else tables(h).localCheckpoint(true)
-      checkpointed(h) = tables(h)
+      val log = tables(h)
+      val snapshot =
+        if (reliableCheckpoints) log.df.checkpoint(eager = true)
+        else log.df.localCheckpoint(true)
+      tables(h) = log.copy(df = snapshot)
+      checkpointed(h) = snapshot
       old.foreach(o => org.apache.spark.sql.GraftBridge.checkpointRdd(o)
         .foreach(_.unpersist(false)))
     }
@@ -341,8 +346,8 @@ final class ArchetypeStore(
   /** Write every archetype to parquet partitioned by (simulation, run). */
   def persist(dir: String): Unit = {
     flush()
-    tables.foreach { case (hash, df) =>
-      latestWins(df)
+    tables.foreach { case (hash, log) =>
+      resolveKeepVersion(log, lit(true))
         .withColumn(VersionCol, lit(0L))
         .repartition(col("simulation"), col("run"))
         .sortWithinPartitions(col("step"), col("entity_id"))
@@ -528,7 +533,7 @@ final class ArchetypeStore(
     */
   def commitDelta(dir: String): Unit = withDirLock(dir) {
     flush()
-    tables.foreach { case (hash, df) =>
+    tables.foreach { case (hash, log) =>
       val prev = readManifest(dir, hash)
       prev.foreach(m => require(m.buckets == bucketCount,
         s"commitDelta: durable dir has bucket layout ${m.buckets}, " +
@@ -542,7 +547,7 @@ final class ArchetypeStore(
       val n = math.max(
         nextCommit.getOrElse(hash, 0L),
         prev.map(_.maxCommit + 1).getOrElse(0L))
-      stageCommit(dir, hash, n, df.filter(col(VersionCol) > lastV))
+      stageCommit(dir, hash, n, log.df.filter(col(VersionCol) > lastV))
       val names = sigByHash(hash).map(_.name).mkString(",")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$dir/$hash.sig"), names)
@@ -648,8 +653,8 @@ final class ArchetypeStore(
         s"store expects $bucketCount — construct the store with " +
         s"entityBuckets matching the manifest")
     val schema = withVersion(Archetype.schemaOf(Archetype.signature(metas)))
-    tables(hash) = liveDurable(dir, hash, metas, m)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    tables(hash) = Log(liveDurable(dir, hash, metas, m)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*), None)
     nextCommit(hash) = m.maxCommit + 1
     durableMaxV(hash) = m.maxV
     commitCounter.updateAndGet(v => math.max(v, m.maxV))
@@ -669,24 +674,36 @@ final class ArchetypeStore(
     val schema = withVersion(Archetype.schemaOf(Archetype.signature(metas)))
     val df = spark.read.parquet(s"$dir/$hash")
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    tables(hash) = df
+    tables(hash) = Log(df, None)
     hash
   }
 
   // -------------------------------------------------------------------
 
-  private def append(hash: String, preparedWithVersion: DataFrame): Unit = {
-    flush()
-    tables(hash) = tables(hash).unionByName(preparedWithVersion)
+  private def runScope = col("simulation") === simulation && col("run") === run
+
+  /** Append version-stamped rows to an archetype's log. `steps` is every
+    * step the rows carry, or None when the caller cannot say; the log
+    * keeps its window-free reads only while no append lands at a step
+    * it already holds.
+    */
+  private def put(hash: String, preparedWithVersion: DataFrame,
+      steps: Option[Set[Long]]): Unit = {
+    val log = tables(hash)
+    val held = for (h <- log.steps; s <- steps if !s.exists(h)) yield h ++ s
+    tables(hash) = Log(log.df.unionByName(preparedWithVersion), held)
   }
 
-  /** Materialize buffered single-row spawns into their tables. */
+  /** Materialize buffered single-row spawns into their tables. Their
+    * ids come fresh from the counter, so one flush repeats no key.
+    */
   def flush(): Unit = {
     pending.foreach { case (hash, rows) =>
       if (rows.nonEmpty) {
         val schema = withVersion(Archetype.schemaOf(sigByHash(hash)))
         val df = spark.createDataFrame(rows.toSeq.asJava, schema)
-        tables(hash) = tables(hash).unionByName(df)
+        // index 3 is `step` in addEntityValues' row layout
+        put(hash, df, Some(rows.map(_.getLong(3)).toSet))
         rows.clear()
       }
     }
@@ -696,6 +713,23 @@ final class ArchetypeStore(
 object ArchetypeStore {
   val VersionCol = "_v"
   val MergeKeys: Seq[String] = Seq("simulation", "run", "entity_id", "step")
+
+  /** One archetype's append log. `steps` holds the steps it covers while
+    * no (entity_id, step) key can repeat in it, and is None once an
+    * append may have rewritten a key — for good: the log then resolves
+    * through the latest-wins window. One map entry carries both, so a
+    * reader on another thread (the streaming ingest appends from its
+    * own) never pairs a log with a stale flag.
+    */
+  private final case class Log(df: DataFrame, steps: Option[Set[Long]])
+
+  /** The log's rows under `scope`, latest `_v` per merge key: the scoped
+    * log itself while no key can repeat, else the window.
+    */
+  private def resolveKeepVersion(log: Log, scope: org.apache.spark.sql.Column): DataFrame = {
+    val scoped = log.df.filter(scope)
+    if (log.steps.isDefined) scoped else latestWinsKeepVersion(scoped)
+  }
 
   private def withVersion(s: org.apache.spark.sql.types.StructType) =
     org.apache.spark.sql.types.StructType(

@@ -36,14 +36,12 @@ final class QueryManager(store: ArchetypeStore) {
     store.getHistory(metas, includeAllRuns)
 }
 
-/** Stamp the target step and merge-insert each archetype's updates
+/** Merge-insert each archetype's updates at the target step
   * (reference: archetype/core/updater.py:15-26).
   */
 final class UpdateManager(store: ArchetypeStore) {
   def collect(updates: Map[String, DataFrame], step: Long): Unit =
-    updates.foreach { case (hash, df) =>
-      store.upsert(hash, df.withColumn("step", lit(step)))
-    }
+    updates.foreach { case (hash, df) => store.upsertAt(hash, df, step) }
 }
 
 /** Sequential priority-ordered execution; a processor's output for an
@@ -116,12 +114,7 @@ final class World private (
 
   var currentStep: Long = 0L
 
-  def step(dt: Double): Unit = {
-    val updates = system.execute(currentStep, dt)
-    updater.collect(updates, currentStep + 1)
-    currentStep += 1
-    if (optimizeInterval > 0 && currentStep % optimizeInterval == 0) store.optimize()
-  }
+  def step(dt: Double): Unit = advance(system.execute(currentStep, dt))
 
   /** One step whose per-archetype updates MATERIALIZE as concurrent
     * Spark jobs (eager localCheckpoint per archetype, one future
@@ -139,7 +132,14 @@ final class World private (
       Future.traverse(updates.toSeq) { case (h, df) =>
         Future(h -> df.localCheckpoint(eager = true))
       }, scala.concurrent.duration.Duration(10, "min")).toMap
-    updater.collect(mat, currentStep + 1)
+    advance(mat)
+  }
+
+  /** Commit one step's updates at `currentStep + 1`, move to that step
+    * and compact every `optimizeInterval` steps.
+    */
+  private def advance(updates: Map[String, DataFrame]): Unit = {
+    updater.collect(updates, currentStep + 1)
     currentStep += 1
     if (optimizeInterval > 0 && currentStep % optimizeInterval == 0) store.optimize()
   }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * the closed-form trajectory for EVERY entity. Per-step latency is
   * reported so rounds can track the latency-vs-entity-count curve
   * (recorded in SURVEY §6d); the structures exercised
-  * (window-resolved state over a growing append log, archetype-pruned
+  * (a growing append log that `World.step` only ever extends by a new
+  * step, so reads skip the latest-wins window; archetype-pruned
   * queries) are the ones that carry to 1000-executor scale.
   */
 class EcsScaleSpec extends SparkSpec {
@@ -61,7 +62,7 @@ class EcsScaleSpec extends SparkSpec {
       reliable = true)
     info(f"1M per-step seconds: ${secs.map(s => f"$s%.1f").mkString(", ")}")
     // step latency must stay bounded — compaction every 2 steps keeps
-    // the resolved-window input from accumulating across the run
+    // the append log's lineage from accumulating across the run
     assert(secs.max < 120.0,
       f"a 1M-entity step took ${secs.max}%.1f s — compaction is not holding")
   }

@@ -615,6 +615,119 @@ class EcsSpec extends SparkSpec {
     assert(x == 8.0, "priority order: (3+1)*2, not 3*2+1")
   }
 
+  /** Window nodes in a read's optimized plan. */
+  private def windowCount(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.size
+
+  /** `resolved`, `getHistory` and the query `World.query` runs, over one
+    * archetype of `store`.
+    */
+  private def reads(store: ArchetypeStore, metas: Seq[ComponentMeta],
+      step: Long): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val hash = Archetype.hashOf(metas)
+    Seq("resolved" -> store.resolved(hash),
+      "getHistory" -> store.getHistory(metas)(hash),
+      "query" -> new QueryManager(store).query(metas, Seq(step))(hash))
+  }
+
+  private def posFrame(ids: Seq[Long], x: Double) = {
+    import spark.implicits._
+    ids.map(i => (i, x, 0.0)).toDF("entity_id", "position__x", "position__y")
+  }
+
+  private def assertWindows(label: String, store: ArchetypeStore,
+      metas: Seq[ComponentMeta], step: Long, expected: Boolean): Unit =
+    reads(store, metas, step).foreach { case (read, df) =>
+      assert((windowCount(df) > 0) == expected,
+        s"$label / $read: expected ${if (expected) "a" else "no"} Window in\n" +
+          df.queryExecution.optimizedPlan)
+    }
+
+  test("reads skip the latest-wins window while no (entity_id, step) key can repeat") {
+    val pos = Seq(PosMeta)
+    val batch = World.make(spark, "sim_test", "run_fast_batch", optimizeInterval = 0)
+    batch.spawnBatch(pos, posFrame(Seq(1L, 2L), 1.0))
+    assertWindows("spawnBatch", batch.store, pos, 0L, expected = false)
+
+    val single = World.make(spark, "sim_test", "run_fast_spawn", optimizeInterval = 0)
+    single.spawn(Position(1.0, 0.0)); single.spawnAt(3L, Position(2.0, 0.0))
+    single.store.flush()
+    assertWindows("spawn + flush", single.store, pos, 0L, expected = false)
+
+    Seq[(String, World => Unit)](
+      "step" -> (_.step(0.5)), "stepEager" -> (_.stepEager(0.5))
+    ).foreach { case (label, stepOnce) =>
+      val w = World.make(spark, "sim_test", s"run_fast_$label", optimizeInterval = 2)
+      w.addProcessor(MovementProcessor)
+      w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
+        .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+      (1 to 3).foreach(_ => stepOnce(w))
+      assertWindows(label, w.store, PosVel, w.currentStep, expected = false)
+      assert(w.query(PosVel).values.head.orderBy("entity_id")
+        .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(2.5, 2.5))
+    }
+  }
+
+  test("reads fall back to the latest-wins window once an append may rewrite a key") {
+    val pos = Seq(PosMeta)
+    def seeded(run: String): World = {
+      val w = World.make(spark, "sim_test", s"run_fb_$run", optimizeInterval = 0)
+      w.spawnBatch(pos, posFrame(Seq(1L, 2L), 1.0))
+      w
+    }
+    val posHash = Archetype.hashOf(pos)
+
+    val up = seeded("upsert")
+    up.store.upsert(posHash, up.store.resolved(posHash).withColumn("step", lit(5L)))
+    assertWindows("step-less upsert", up.store, pos, 0L, expected = true)
+
+    val app = seeded("append")
+    app.store.appendRows(posHash, app.store.resolved(posHash).withColumn("step", lit(5L)))
+    assertWindows("appendRows", app.store, pos, 0L, expected = true)
+
+    val dw = seeded("despawn_where")
+    dw.spawnBatch(PosVel, posFrame(Seq(7L), 1.0)
+      .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+    dw.store.despawnWhere(posHash, col("entity_id") === 1L)
+    assertWindows("despawnWhere", dw.store, pos, 0L, expected = true)
+    assertWindows("despawnWhere, other archetype", dw.store, PosVel, 0L, expected = false)
+
+    val rm = World.make(spark, "sim_test", "run_fb_remove", optimizeInterval = 0)
+    rm.despawn(rm.spawn(Position(1.0, 0.0)))
+    assertWindows("removeEntity", rm.store, pos, 0L, expected = true)
+
+    val mig = seeded("migrate")
+    mig.migrateWhere(pos, PosVel, col("entity_id") === 1L,
+      defaults = Map("velocity__vx" -> lit(0.0), "velocity__vy" -> lit(0.0)))
+    assertWindows("migrate source", mig.store, pos, 0L, expected = true)
+    assertWindows("migrate target", mig.store, PosVel, 0L, expected = true)
+
+    // a late spawnBatch at a held step, as ecs_component_diff does
+    val late = seeded("late_batch")
+    late.spawnBatch(pos, posFrame(Seq(3L), 4.0))
+    assertWindows("spawnBatch at a held step", late.store, pos, 0L, expected = true)
+
+    // a counter id (1) may collide with a spawnBatch id: latest wins
+    val clash = seeded("spawn_clash")
+    assert(clash.spawn(Position(9.0, 0.0)) == 1L)
+    assertWindows("spawn at a held step", clash.store, pos, 0L, expected = true)
+    assert(clash.query(pos)(posHash).orderBy("entity_id")
+      .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(9.0, 1.0))
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_fb").toString
+    val src = seeded("attach")
+    src.store.persist(s"$dir/persist")
+    src.store.commitDelta(s"$dir/durable")
+    val attached = new ArchetypeStore(spark, "sim_test", "run_fb_attach")
+    attached.attach(pos, s"$dir/persist")
+    assertWindows("attach", attached, pos, 0L, expected = true)
+    val durable = new ArchetypeStore(spark, "sim_test", "run_fb_attach")
+    durable.attachDurable(pos, s"$dir/durable")
+    assertWindows("attachDurable", durable, pos, 0L, expected = true)
+  }
+
   test("queryNeighbors: IVF over a live component column respects despawns") {
     import org.apache.spark.sql.functions._
     val world = World.make(spark, "sim_test", "run_vecsearch_spec")
