@@ -147,7 +147,9 @@ def _bad(expected, v):
 def session(jar=None, master=None, app_name="graft", shuffle_partitions=None):
     """Build a SparkSession with the graft surface installed (the
     Python twin of ``Graft.session()``): tuned defaults + the native
-    as-of strategy + every ``graft_*`` SQL function.
+    as-of strategy + every ``graft_*`` SQL function + the local file
+    system that does not start a ``chmod``/``readlink`` process per
+    file operation.
 
     ``jar``: path to the graft jar (or a classes directory); required
     unless the classpath already carries graft.
@@ -167,6 +169,8 @@ def session(jar=None, master=None, app_name="graft", shuffle_partitions=None):
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.NioLocalFs")
         .getOrCreate()
     )
     install(spark)

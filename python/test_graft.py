@@ -39,6 +39,15 @@ def test_registry_is_complete(spark):
         assert any(n.startswith(family) for n in names), family
 
 
+def test_session_installs_the_local_file_system(spark):
+    conf = spark._jsc.hadoopConfiguration()
+    assert conf.get("fs.file.impl") == "graft.NioLocalFileSystem"
+    assert conf.get("fs.AbstractFileSystem.file.impl") == "graft.NioLocalFs"
+    jfs = spark._jvm.org.apache.hadoop.fs.FileSystem.get(
+        spark._jvm.java.net.URI.create("file:///"), conf)
+    assert jfs.getClass().getName() == "graft.NioLocalFileSystem"
+
+
 def test_toy_world_closed_form(spark):
     from graft import Component, World, sql_processor
 

@@ -1,7 +1,9 @@
 #!/bin/bash
-# CI gate for the Python on-ramp: compile the JVM side, then run the
-# pytest suite (python/test_graft.py) against sf0.001.
+# CI gate for the Python on-ramp: package the JVM side (the suite puts
+# the graft jar on the driver classpath when one exists, so it must not
+# be stale), then run the pytest suite (python/test_graft.py) against
+# sf0.001.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-sbt -batch compile > /dev/null
+sbt -batch package > /dev/null
 exec python3 -m pytest python/ -q "$@"

@@ -39,6 +39,18 @@ object Graft {
     * cluster, the executor cores registered by then). The settings are
     * applied after `getOrCreate`, so a call that returns a live session
     * re-applies them too.
+    *
+    * The builder also installs the local file system
+    * ([[NioLocalFileSystem]] as `fs.file.impl`, [[NioLocalFs]] as
+    * `fs.AbstractFileSystem.file.impl`): without libhadoop, Hadoop's own
+    * starts a `chmod` or `readlink` child process on every local file
+    * create, mkdir and rename, about a hundred per streaming
+    * micro-batch. It does both in java.nio instead and leaves symlinks,
+    * sticky bits and file systems without POSIX attributes to Hadoop.
+    * The two keys go into the SparkContext's Hadoop conf, so they take
+    * effect when this call creates the context and no `file:` file
+    * system is cached in the JVM yet; a live session keeps the file
+    * system its context was built with.
     */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       appName: String = "graft"): SparkSession = {
@@ -46,6 +58,8 @@ object Graft {
       .master(master)
       .appName(appName)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.conf.set("spark.sql.adaptive.enabled", "true")

@@ -1,7 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 
 /** Graft.session is the one session factory: the spec session comes
   * from it with the tuned settings and the graft surface, a repeat call
@@ -23,6 +26,13 @@ class GraftEntrypointSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
       spark.sparkContext.defaultParallelism)
     assert(dot(spark) == 11.0)
+  }
+
+  test("the spec session's local file system is the non-forking one") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(URI.create("file:///"), conf).isInstanceOf[NioLocalFileSystem])
+    assert(FileSystem.getLocal(conf).getRaw.isInstanceOf[NioRawLocalFileSystem])
+    assert(FileContext.getLocalFSFileContext(conf).getDefaultFileSystem.isInstanceOf[NioLocalFs])
   }
 
   test("a second Graft.session call returns the live session and re-applies its settings") {
