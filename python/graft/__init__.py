@@ -144,10 +144,13 @@ def _bad(expected, v):
             f"[input_value={v!r}, type={type(v).__name__}]")
 
 
-def session(jar=None, master=None, app_name="graft", shuffle_partitions=None):
-    """Build a SparkSession with the graft surface installed (the
-    Python twin of ``Graft.session()``): tuned defaults + the native
-    as-of strategy + every ``graft_*`` SQL function + the local file
+def session(jar=None, master=None, app_name="graft"):
+    """Build a SparkSession with the graft surface installed: the
+    settings and surface come from ``Graft.session`` on the JVM, so a
+    Python session plans like every oracle-checked JVM session.
+
+    The builder sets only what must exist before the JVM starts: the
+    classpath, master, app name, ``spark.ui.enabled`` and the local file
     system that does not start a ``chmod``/``readlink`` process per
     file operation.
 
@@ -156,24 +159,19 @@ def session(jar=None, master=None, app_name="graft", shuffle_partitions=None):
     """
     import os
 
-    cores = os.cpu_count() or 4
-    b = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cores}]")
+    master = master or f"local[{os.cpu_count() or 4}]"
+    b = SparkSession.builder.appName(app_name).master(master)
     if jar:
         jar = os.path.abspath(jar)
         b = b.config("spark.driver.extraClassPath", jar).config(
             "spark.executor.extraClassPath", jar)
     spark = (
-        b.config("spark.sql.shuffle.partitions", shuffle_partitions or cores)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false")
+        b.config("spark.ui.enabled", "false")
         .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
         .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.NioLocalFs")
         .getOrCreate()
     )
-    install(spark)
+    spark._jvm.graft.Graft.session(master, app_name)
     return spark
 
 

@@ -48,6 +48,22 @@ def test_session_installs_the_local_file_system(spark):
     assert jfs.getClass().getName() == "graft.NioLocalFileSystem"
 
 
+def test_session_settings_come_from_the_jvm_factory(spark):
+    # the values Graft.session sets on every oracle-checked JVM session
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+        spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(spark._jvm.graft.Tables.NanosAsLongKey()) == "true"
+    # parquet Timestamp(isAdjustedToUTC=false) reads as timestamp_ntz,
+    # in Python as in the JVM
+    py_type = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet")) \
+        .schema["o_orderdate"].dataType.simpleString()
+    jvm_type = spark._jvm.graft.Tables.load(
+        spark._jsparkSession, SF_DIR, "orders").schema() \
+        .apply("o_orderdate").dataType().simpleString()
+    assert py_type == jvm_type == "timestamp_ntz"
+
+
 def test_toy_world_closed_form(spark):
     from graft import Component, World, sql_processor
 

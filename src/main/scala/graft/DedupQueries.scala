@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.BoundedOffsetPairs
 
 /** Deduplication suite (SURVEY §2.C) over `documents`.
   *
@@ -502,83 +503,27 @@ object DedupQueries {
   }
 
   // C4 — exact character-3-gram Jaccard for bounded id-offset pairs
-  // (equi-join on id_b = id_a + off, off ∈ 1..10 — the verification
-  // companion to C2's approximate path).
-  // Shuffle-shape note (r2): the pair skeleton (id_a, id_b) is built
-  // and shuffled NARROW — exploding the ×10 offsets on a side that
-  // carries gram arrays would copy and shuffle every array ten times
-  // (measured 2.7× slower at sf0.1). Arrays attach by two id
-  // equi-joins afterwards. Grams are injective base-131 long codes
-  // (graft.functions.GramCodeArrayExpr) and the per-pair step is a
-  // codegen'd sorted merge — no per-pair string hash sets; Jaccard
-  // values are exactly the string-gram values.
-  /** `doc_id`'s bucket among `width`-id ranges, by integral division:
-    * exact at any id, where a double division rounds ids above 2⁵³. */
-  private[graft] def idBucket(width: Long): Column = expr(s"doc_id DIV $width")
-
-  /** Shared skeleton for C4/C8: every bounded-offset pair
-    * (id_a, id_b = id_a + off, off ∈ 1..maxOff, both present) with the
-    * sorted-merge gram-intersection count and both set sizes.
-    *
-    * SCALE SHAPE (r9 sf100 rewrite): the previous pair-skeleton +
-    * two-attach-join form re-exchanged 50M pairs carrying a ~5 KB
-    * distinct-gram array (the first attach's output is the second
-    * attach's shuffle input — ~80 GB of sort/spill churn at sf100,
-    * 21× wall for 10× data even cache-warm). Bounded offsets are a
-    * LOCALITY property: bucket doc_ids into 2¹⁴-id ranges (plus a
-    * lookahead copy of each bucket's first maxOff ids into the
-    * previous bucket, flagged so it never plays id_a), and every pair
-    * is adjacent inside one sorted bucket — ONE shuffle of the gram
-    * table, then a per-partition sliding window of ≤ maxOff buffered
-    * rows emits every intersection in-task. mapPartitions is the
-    * honest tool here: a self-join whose matches are all within a
-    * bounded sort distance is per-partition imperative logic, and no
-    * join/window composition expresses it without re-shuffling
-    * payload-width rows. Per-task memory is maxOff gram arrays.
+  // (id_b = id_a + off, off ∈ 1..10 — the verification companion to
+  // C2's approximate path). Grams are injective base-131 long codes
+  // (graft.functions.GramCodeArrayExpr), so Jaccard over codes is
+  // exactly Jaccard over the string grams.
+  /** Shared skeleton for C4/C8: every pair (id_a, id_b ≤ id_a + 10,
+    * both present) with the sorted-merge gram-intersection count and
+    * both set sizes, on [[graft.operators.BoundedOffsetPairs]]: one
+    * exchange of the gram table, no pair row shuffled. The window is
+    * the oracle's `b.doc_id <= a.doc_id + 10`.
     */
-  private[graft] def boundedOffsetIntersects(s: SparkSession, dir: String,
-      maxOff: Int = 10): DataFrame = {
+  private[graft] def boundedOffsetIntersects(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftBridge
     import s.implicits._
-    val B = 1L << 14
     val gramCodes = GraftBridge.column(
       graft.functions.GramCodeArrayExpr(GraftBridge.expression(col("text")), 3))
-    val grams = docs(s, dir).select(col("doc_id"), gramCodes.as("g"))
-      .withColumn("bk", idBucket(B))
-      .withColumn("cp", lit(false))
-    val lookahead = grams
-      .filter(pmod(col("doc_id"), lit(B)) < maxOff && col("bk") > 0)
-      .withColumn("bk", col("bk") - 1)
-      .withColumn("cp", lit(true))
-    grams.unionByName(lookahead)
-      .select(col("bk"), col("doc_id"), col("g"), col("cp"))
-      .repartition(col("bk"))
-      .sortWithinPartitions(col("bk"), col("doc_id"))
-      .as[(Long, Long, Array[Long], Boolean)]
-      .mapPartitions { iter =>
-        def merge(x: Array[Long], y: Array[Long]): Long = {
-          var i = 0; var j = 0; var c = 0L
-          while (i < x.length && j < y.length) {
-            if (x(i) == y(j)) { c += 1; i += 1; j += 1 }
-            else if (x(i) < y(j)) i += 1
-            else j += 1
-          }
-          c
-        }
-        val buf = scala.collection.mutable.ArrayDeque.empty[(Long, Long, Array[Long], Boolean)]
-        iter.flatMap { case cur @ (bk, id, g, _) =>
-          while (buf.nonEmpty &&
-            (buf.head._1 != bk || buf.head._2 < id - maxOff)) buf.removeHead()
-          val out = buf.iterator
-            .filter(!_._4) // a lookahead copy never plays id_a
-            .map { case (_, ida, ga, _) =>
-              (ida, id, merge(ga, g), ga.length, g.length)
-            }.toList
-          buf.append(cur)
-          out
-        }
+    BoundedOffsetPairs[Array[Long], (Long, Long, Long, Int, Int)](
+        docs(s, dir).select(col("doc_id"), gramCodes.as("g")), 10) {
+      _.map { case (idA, gA, idB, gB) =>
+        (idA, idB, BoundedOffsetPairs.intersectCount(gA, gB), gA.length, gB.length)
       }
-      .toDF("id_a", "id_b", "inter", "na", "nb")
+    }.toDF("id_a", "id_b", "inter", "na", "nb")
   }
 
   private[graft] def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
@@ -1288,7 +1233,6 @@ object DedupQueries {
     import s.implicits._
     val reps = docs(s, dir).groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-    val windowW = 10
     // —— signature-family collapse (r10, after the sf100 spill death:
     // `No space left on device` with 67 GB free). Band hashes are pure
     // functions of the 64-value minhash signature, so CANDIDACY is
@@ -1381,80 +1325,39 @@ object DedupQueries {
       .groupBy(col("r"))
       .agg(sum(col("a.nf").cast("long") * col("b.nf")).as("cross_cand"))
       .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
-    // —— FUSED windowed pass (r11, VERDICT r10 ask #3): the exact
-    // ground truth and the three per-r collision flags are BOTH
-    // windowed-pair (id_b ∈ (id_a, id_a+10]) computations, and both
-    // read only row-local payloads (the sorted-distinct shingle set;
-    // the 28 band hashes). The old shape ran them as two separate
-    // O(n·window) self-joins — the truth one over EXPLODED (doc, p)
-    // rows through a (p, id-bucket) equi-join + pair groupBy + two
-    // size-attach joins + a persist/count, the flags one over
-    // bh-carrying id buckets LEFT-joined back against the truth
-    // table — at sf10 those two pipelines were most of the 68.7 s
-    // wall. Now ONE bucketed sliding-window pass (the C4/C8
-    // boundedOffsetIntersects skeleton: 2¹⁴-id buckets + lookahead
-    // boundary copies, per-partition ≤windowW-row buffer) computes,
-    // per in-window pair and entirely in-task: the sorted-merge
-    // shingle intersection (== the old nshared count over distinct
-    // p), the truth predicate nshared·3 ≥ na+nb, and the three
-    // any-band-equal flags — and folds them into SEVEN partition
-    // counters. No pair row ever reaches an exchange; the only
-    // shuffle is the one bk repartition of the (ps, bh) table.
-    // Counter semantics are bit-identical: wc_r counts in-window
-    // pairs colliding at r, tf_r those also true, ntrue ALL true
-    // pairs (flagged or not) — exactly the old aggregate + count().
-    val B = 1L << 14
-    val docFrame = feat
-      .withColumn("bh", bhExpr)
-      .select(col("doc_id"), col("ps"), col("bh"))
-      .withColumn("bk", idBucket(B))
-      .withColumn("cp", lit(false))
-    val lookahead = docFrame
-      .filter(pmod(col("doc_id"), lit(B)) < windowW && col("bk") > 0)
-      .withColumn("bk", col("bk") - 1)
-      .withColumn("cp", lit(true))
-    val counters = docFrame.unionByName(lookahead)
-      .select(col("bk"), col("doc_id"), col("ps"), col("bh"), col("cp"))
-      .repartition(col("bk"))
-      .sortWithinPartitions(col("bk"), col("doc_id"))
-      .as[(Long, Long, Array[Long], Array[Long], Boolean)]
-      .mapPartitions { iter =>
-        def interCount(x: Array[Long], y: Array[Long]): Long = {
-          var i = 0; var j = 0; var c = 0L
-          while (i < x.length && j < y.length) {
-            if (x(i) == y(j)) { c += 1; i += 1; j += 1 }
-            else if (x(i) < y(j)) i += 1
-            else j += 1
-          }
-          c
-        }
+    // Windowed truth and flags in one pass over the in-window pairs
+    // (id_b ∈ (id_a, id_a + 10], the oracle's window), on
+    // BoundedOffsetPairs: each task folds its pairs into seven counters,
+    // so no pair row reaches an exchange. Per pair, the sorted-merge
+    // intersection of the distinct shingle sets is the oracle's
+    // nshared, 3·nshared ≥ na + nb its truth test, and any equal band
+    // hash in r's slots its collision. The counters are exact: the
+    // operator yields each in-window pair once, so wc_r counts the
+    // in-window pairs colliding at r, tf_r those also true, and ntrue
+    // every true pair, flagged or not. Shape history: OPTIMIZATION_r11.md.
+    val counters = BoundedOffsetPairs[(Array[Long], Array[Long]),
+        (Long, Long, Long, Long, Long, Long, Long)](
+        feat.withColumn("bh", bhExpr).select(col("doc_id"), col("ps"), col("bh")), 10) {
+      pairs =>
         def anyEq(x: Array[Long], y: Array[Long], from: Int, until: Int): Boolean = {
           var i = from
           while (i < until) { if (x(i) == y(i)) return true; i += 1 }
           false
         }
         val acc = new Array[Long](7) // wc4 wc8 wc16 tf4 tf8 tf16 ntrue
-        val buf = scala.collection.mutable.ArrayDeque
-          .empty[(Long, Long, Array[Long], Array[Long], Boolean)]
-        iter.foreach { case cur @ (bk, id, ps, bh, _) =>
-          while (buf.nonEmpty &&
-            (buf.head._1 != bk || buf.head._2 < id - windowW)) buf.removeHead()
-          buf.foreach { case (_, _, psA, bhA, cpA) =>
-            if (!cpA) { // a lookahead copy never plays id_a
-              val c4 = anyEq(bhA, bh, 0, 16)
-              val c8 = anyEq(bhA, bh, 16, 24)
-              val c16 = anyEq(bhA, bh, 24, 28)
-              val isTrue = interCount(psA, ps) * 3 >= psA.length + ps.length
-              if (c4) { acc(0) += 1; if (isTrue) acc(3) += 1 }
-              if (c8) { acc(1) += 1; if (isTrue) acc(4) += 1 }
-              if (c16) { acc(2) += 1; if (isTrue) acc(5) += 1 }
-              if (isTrue) acc(6) += 1
-            }
-          }
-          buf.append(cur)
+        pairs.foreach { case (_, (psA, bhA), _, (ps, bh)) =>
+          val c4 = anyEq(bhA, bh, 0, 16)
+          val c8 = anyEq(bhA, bh, 16, 24)
+          val c16 = anyEq(bhA, bh, 24, 28)
+          val isTrue =
+            BoundedOffsetPairs.intersectCount(psA, ps) * 3 >= psA.length + ps.length
+          if (c4) { acc(0) += 1; if (isTrue) acc(3) += 1 }
+          if (c8) { acc(1) += 1; if (isTrue) acc(4) += 1 }
+          if (c16) { acc(2) += 1; if (isTrue) acc(5) += 1 }
+          if (isTrue) acc(6) += 1
         }
         Iterator.single((acc(0), acc(1), acc(2), acc(3), acc(4), acc(5), acc(6)))
-      }
+    }
       .toDF("wc4", "wc8", "wc16", "tf4", "tf8", "tf16", "ntrue")
       .agg(sum("wc4"), sum("wc8"), sum("wc16"),
         sum("tf4"), sum("tf8"), sum("tf16"), sum("ntrue"))

@@ -385,8 +385,7 @@ object EcsQueries {
     // SFs and sf10 (layout unchanged, bench comparable), ~85 at
     // sf100. One cheap metadata-count job; join results are
     // byte-identical (count + sums of exact integer displacements).
-    val nBuckets = math.max(8L, math.min(512L,
-      seed.count() * 9L / (2L << 20))).toInt
+    val nBuckets = QueryShape.bucketCount(seed.count() * 9L, 1L << 21)
     world.spawnBatch(PosVel, seed)
     (1 to 8).foreach(_ => world.step(0.25))
     val hist = world.getHistory(PosVel)(PosVelHash)

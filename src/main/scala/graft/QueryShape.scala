@@ -17,4 +17,15 @@ object QueryShape {
     */
   def stagedSort(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(cols.head).orderBy(cols: _*)
+
+  /** Rows up to which a side of known size is broadcast; past it the
+    * shuffle join is the honest plan on a real cluster.
+    */
+  val BroadcastRowLimit: Long = 1L << 18
+
+  /** `quantity / perBucket` buckets, clamped to [8, 512]: 8 keeps the
+    * small scales' layout, 512 bounds the file and task count.
+    */
+  def bucketCount(quantity: Long, perBucket: Long): Int =
+    math.max(8L, math.min(512L, quantity / perBucket)).toInt
 }

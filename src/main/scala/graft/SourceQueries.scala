@@ -225,8 +225,8 @@ object SourceQueries {
     val liRaw = Tables.load(s, dir, "lineitem")
     // size the layout from the UNPROJECTED relation's file bytes
     // (projection would scale the estimate by guessed column widths)
-    val nBuckets = math.max(8L, math.min(512L,
-      liRaw.queryExecution.optimizedPlan.stats.sizeInBytes.toLong / (64L << 20))).toInt
+    val nBuckets = QueryShape.bucketCount(
+      liRaw.queryExecution.optimizedPlan.stats.sizeInBytes.toLong, 64L << 20)
     liRaw
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
       .repartition(nBuckets, col("l_orderkey"))

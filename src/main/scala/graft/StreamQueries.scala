@@ -1398,7 +1398,7 @@ object StreamQueries {
       .agg(countDistinct(col("event_type"), date_trunc("hour", col("ts")))
         .as("n")).head.getLong(0)
     val carrySide =
-      if (nCarryRows <= (1L << 18)) broadcast(summaries) else summaries
+      if (nCarryRows <= QueryShape.BroadcastRowLimit) broadcast(summaries) else summaries
     base
       .withColumn("rn_l", row_number().over(wl))
       .withColumn("lag_l", collect_list(col("v")).over(wf))

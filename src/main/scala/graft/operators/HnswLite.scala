@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.VectorOps
+import graft.{QueryShape, VectorOps}
 
 /** HNSW-lite: a layered-pivot beam search — the navigable-hierarchy
   * idea of HNSW (Malkov & Yashunin 2016) re-expressed in joins instead
@@ -162,11 +162,10 @@ object HnswLite {
           .localCheckpoint(eager = true)
       }
       // edge frames are level-sized (sizes(jj) rows): broadcast while
-      // they fit comfortably (≤ 2^18 rows ≈ 140 MB of doubles); past
-      // that the shuffle join is the honest plan on a real cluster
+      // they fit comfortably (≤ 2^18 rows ≈ 140 MB of doubles)
       for (jj <- m - 2 to target by -1)
         beam = descend(beam, edges(jj), if (jj == target) 1 else routeBeam,
-          nodes, smallEdges = sizes(jj) <= (1L << 18))
+          nodes, smallEdges = sizes(jj) <= QueryShape.BroadcastRowLimit)
       val assigned = timed("  route: descend chain") {
         beam.select(col("nid"), col("nv"), col("pid"))
           .localCheckpoint(eager = true)

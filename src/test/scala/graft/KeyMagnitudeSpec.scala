@@ -69,7 +69,7 @@ class KeyMagnitudeSpec extends SparkSpec {
     val B = 1L << 14
     val id = (1L << 53) + 16383L
     val row = spark.range(1).select(lit(id).as("doc_id"))
-      .select(DedupQueries.idBucket(B), pmod(col("doc_id"), lit(B)))
+      .select(graft.operators.BoundedOffsetPairs.idBucket(B), pmod(col("doc_id"), lit(B)))
       .head()
     assert(row.getLong(0) == (1L << 39))
     assert(row.getLong(1) == 16383L)
