@@ -22,13 +22,17 @@ import scala.jdk.CollectionConverters._
   *  - Each archetype table is an append-only DataFrame carrying an
   *    internal commit-version column `_v`. Upsert = pure append
   *    (shuffle-free at write). While every append landed at a step the
-  *    archetype did not hold yet, no (entity_id, step) key can repeat
-  *    and reads return the log as is; once an append may have
-  *    rewritten a key, latest-wins resolution happens at read with one
-  *    window over the merge keys (merge-on-read). This is how the same
-  *    semantics stay cheap on a 1000-executor cluster: writes never
-  *    rewrite history, and `optimize()` cuts the log's lineage — the
-  *    analogue of the reference's `table.optimize()`.
+  *    archetype did not hold yet, no (entity_id, step) key can repeat:
+  *    the log then indexes each step's frame, and a query at a step
+  *    plans only that frame — a chain back to the last snapshot, not
+  *    the whole log (the reference's querier filters one step,
+  *    querier.py:24-45). Once an append may have rewritten a key,
+  *    latest-wins resolution happens at read with one window over the
+  *    merge keys (merge-on-read). This is how the same semantics stay
+  *    cheap on a 1000-executor cluster: writes never rewrite history,
+  *    and `optimize()` cuts the log's lineage — the analogue of the
+  *    reference's `table.optimize()` — and re-points every frame at
+  *    the new snapshot.
   *  - Persistence is parquet partitioned by (simulation, run), so a
   *    cluster-scale store partition-prunes on exactly the keys every
   *    query filters on. `step` arrives sorted within files, so parquet
@@ -73,7 +77,7 @@ final class ArchetypeStore(
       sigByHash(hash) = Archetype.signature(metas)
       val schema = withVersion(Archetype.schemaOf(metas))
       tables(hash) = Log(spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), schema), Some(Set.empty))
+        java.util.Collections.emptyList[Row](), schema), Some(Map.empty))
     }
     hash
   }
@@ -262,8 +266,29 @@ final class ArchetypeStore(
     resolveKeepVersion(tables(hash), runScope).drop(VersionCol)
   }
 
-  def getArchetypes(metas: Seq[ComponentMeta]): Map[String, DataFrame] =
-    matchingHashes(metas).map(h => h -> resolved(h)).toMap
+  /** Latest-wins rows at `steps` that satisfy `cond`, per archetype
+    * matching `metas`, scoped to (sim, run) (reference:
+    * querier.py:24-45). A window-free log reads only its frames at
+    * `steps`, so a step's plan is its frame's chain back to the last
+    * snapshot; otherwise the resolved log is filtered to `steps`.
+    */
+  def atSteps(metas: Seq[ComponentMeta], steps: Seq[Long],
+      cond: org.apache.spark.sql.Column): Map[String, DataFrame] = {
+    flush()
+    matchingHashes(metas).map { h =>
+      val log = tables(h)
+      h -> (log.frames match {
+        case Some(frames) =>
+          steps.distinct.flatMap(frames.get).reduceOption(_ unionByName _)
+            .getOrElse(spark.createDataFrame(
+              java.util.Collections.emptyList[Row](), log.df.schema))
+            .filter(runScope && cond).drop(VersionCol)
+        case None =>
+          resolveKeepVersion(log, runScope).drop(VersionCol)
+            .filter(col("step").isin(steps: _*) && cond)
+      })
+    }.toMap
+  }
 
   /** Full step-history (all upserted states, latest per (entity, step)).
     * includeAllRuns widens the scope to every run of this simulation
@@ -294,7 +319,8 @@ final class ArchetypeStore(
 
   /** [[upsert]] of one step's frame: every row of `df` is stamped
     * `step`. While the archetype holds no row at `step` yet, no key can
-    * repeat, and its reads keep skipping the latest-wins window.
+    * repeat: the append becomes the log's frame at `step`, and reads
+    * keep skipping the latest-wins window.
     */
   def upsertAt(hash: String, df: DataFrame, step: Long): Unit =
     appendVersioned(hash, df.withColumn("step", lit(step)), Some(step))
@@ -305,7 +331,7 @@ final class ArchetypeStore(
     val prepared = df
       .withColumn(VersionCol, lit(commitCounter.incrementAndGet()))
       .select(schema.fieldNames.map(col).toIndexedSeq :+ col(VersionCol): _*)
-    put(hash, prepared, step.map(Set(_)))
+    put(hash, prepared, step.map(s => Map(s -> prepared)))
   }
 
   /** Plain append (reference: store.py:258-261 `update`). */
@@ -314,8 +340,12 @@ final class ArchetypeStore(
   /** Compact: checkpoint each archetype's raw append log (every
     * version, not the resolved view) and cut its lineage (the analogue
     * of LanceDB `table.optimize()`). Call every few steps in a long loop.
-    * The previous compaction's checkpoint blocks are released once the
-    * new one materializes, so long simulations hold at most one
+    * The archetypes materialize as concurrent jobs, each under the
+    * caller's SparkContext local properties ([[concurrently]]). Every
+    * frame of a window-free log is then re-pointed at its step of the
+    * new snapshot, and only after that are the previous compaction's
+    * checkpoint blocks released — a frame left on the old snapshot
+    * would read freed blocks. Long simulations so hold at most one
     * snapshot per archetype.
     *
     * With `reliableCheckpoints` the snapshot goes to the session's
@@ -330,16 +360,17 @@ final class ArchetypeStore(
     if (reliableCheckpoints)
       require(spark.sparkContext.getCheckpointDir.isDefined,
         "reliableCheckpoints requires SparkContext.setCheckpointDir")
-    tables.keys.toSeq.foreach { h =>
-      val old = checkpointed.get(h)
-      val log = tables(h)
-      val snapshot =
-        if (reliableCheckpoints) log.df.checkpoint(eager = true)
-        else log.df.localCheckpoint(true)
-      tables(h) = log.copy(df = snapshot)
-      checkpointed(h) = snapshot
-      old.foreach(o => org.apache.spark.sql.GraftBridge.checkpointRdd(o)
-        .foreach(_.unpersist(false)))
+    val logs = tables.toSeq
+    val snapshots = concurrently(spark, logs) { case (_, log) =>
+      if (reliableCheckpoints) log.df.checkpoint(eager = true)
+      else log.df.localCheckpoint(true)
+    }
+    logs.zip(snapshots).foreach { case ((h, log), snapshot) =>
+      tables(h) = Log(snapshot, log.frames.map(_.map { case (s, _) =>
+        s -> snapshot.filter(col("step") === s)
+      }))
+      checkpointed.put(h, snapshot).foreach(old =>
+        org.apache.spark.sql.GraftBridge.checkpointRdd(old).foreach(_.unpersist(false)))
     }
   }
 
@@ -682,15 +713,16 @@ final class ArchetypeStore(
 
   private def runScope = col("simulation") === simulation && col("run") === run
 
-  /** Append version-stamped rows to an archetype's log. `steps` is every
-    * step the rows carry, or None when the caller cannot say; the log
-    * keeps its window-free reads only while no append lands at a step
-    * it already holds.
+  /** Append version-stamped rows to an archetype's log. `frames` maps
+    * every step the rows carry to its rows, or is None when the caller
+    * cannot say; the log keeps its window-free reads only while no
+    * append lands at a step it already holds.
     */
   private def put(hash: String, preparedWithVersion: DataFrame,
-      steps: Option[Set[Long]]): Unit = {
+      frames: Option[Map[Long, DataFrame]]): Unit = {
     val log = tables(hash)
-    val held = for (h <- log.steps; s <- steps if !s.exists(h)) yield h ++ s
+    val held = for (h <- log.frames; f <- frames if !f.keys.exists(h.contains))
+      yield h ++ f
     tables(hash) = Log(log.df.unionByName(preparedWithVersion), held)
   }
 
@@ -703,7 +735,8 @@ final class ArchetypeStore(
         val schema = withVersion(Archetype.schemaOf(sigByHash(hash)))
         val df = spark.createDataFrame(rows.toSeq.asJava, schema)
         // index 3 is `step` in addEntityValues' row layout
-        put(hash, df, Some(rows.map(_.getLong(3)).toSet))
+        put(hash, df, Some(rows.map(_.getLong(3)).distinct
+          .map(s => s -> df.filter(col("step") === s)).toMap))
         rows.clear()
       }
     }
@@ -714,21 +747,40 @@ object ArchetypeStore {
   val VersionCol = "_v"
   val MergeKeys: Seq[String] = Seq("simulation", "run", "entity_id", "step")
 
-  /** One archetype's append log. `steps` holds the steps it covers while
-    * no (entity_id, step) key can repeat in it, and is None once an
-    * append may have rewritten a key — for good: the log then resolves
-    * through the latest-wins window. One map entry carries both, so a
-    * reader on another thread (the streaming ingest appends from its
-    * own) never pairs a log with a stale flag.
+  /** One archetype's append log. While no (entity_id, step) key can
+    * repeat in it, `frames` maps each step it holds to that step's
+    * rows: the append that wrote them, or the last snapshot filtered to
+    * the step. Its key set is the steps the log covers. `frames` is
+    * None once an append may have rewritten a key — for good: the log
+    * then resolves through the latest-wins window. One map entry
+    * carries both, so a reader on another thread (the streaming ingest
+    * appends from its own) never pairs a log with stale frames.
     */
-  private final case class Log(df: DataFrame, steps: Option[Set[Long]])
+  private final case class Log(df: DataFrame, frames: Option[Map[Long, DataFrame]])
 
   /** The log's rows under `scope`, latest `_v` per merge key: the scoped
     * log itself while no key can repeat, else the window.
     */
   private def resolveKeepVersion(log: Log, scope: org.apache.spark.sql.Column): DataFrame = {
     val scoped = log.df.filter(scope)
-    if (log.steps.isDefined) scoped else latestWinsKeepVersion(scoped)
+    if (log.frames.isDefined) scoped else latestWinsKeepVersion(scoped)
+  }
+
+  /** `f` over `items` as concurrent Spark jobs, one future each. A pool
+    * thread keeps the SparkContext local properties it was created
+    * with, so each task runs under a copy of the caller's instead: job
+    * group, description, scheduler pool and custom tags then reach
+    * these jobs, and a `cancelJobGroup` cancels them.
+    */
+  private[ecs] def concurrently[A, B](spark: SparkSession, items: Seq[A])(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import org.apache.spark.sql.GraftBridge
+    val sc = spark.sparkContext
+    val props = GraftBridge.localProperties(sc)
+    Await.result(
+      Future.traverse(items)(a => Future(GraftBridge.withLocalProperties(sc, props)(f(a)))),
+      scala.concurrent.duration.Duration.Inf)
   }
 
   private def withVersion(s: org.apache.spark.sql.types.StructType) =

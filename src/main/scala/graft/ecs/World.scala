@@ -23,10 +23,8 @@ trait Processor {
 final class QueryManager(store: ArchetypeStore) {
   def query(metas: Seq[ComponentMeta], steps: Seq[Long],
       entities: Option[Seq[Long]] = None): Map[String, DataFrame] =
-    store.getArchetypes(metas).map { case (h, df) =>
-      val base = df.filter(col("step").isin(steps: _*) && col("is_active"))
-      h -> entities.fold(base)(ids => base.filter(col("entity_id").isin(ids: _*)))
-    }
+    store.atSteps(metas, steps, entities.fold(col("is_active"))(ids =>
+      col("is_active") && col("entity_id").isin(ids: _*)))
 
   /** Archetypes a component request currently matches (subset rule). */
   def matchingHashes(metas: Seq[ComponentMeta]): Seq[String] =
@@ -118,22 +116,17 @@ final class World private (
 
   /** One step whose per-archetype updates MATERIALIZE as concurrent
     * Spark jobs (eager localCheckpoint per archetype, one future
-    * each): wall time is the DAG's critical path instead of the
-    * processor sum — see [[SimpleSystem.stages]] — and every step's
-    * lineage is cut at the materialization. State after the step is
-    * identical to [[step]]'s: disjoint processors commute, chained
-    * ones already share one plan per archetype.
+    * each, under the caller's local properties — see
+    * [[ArchetypeStore.concurrently]]): wall time is the DAG's critical
+    * path instead of the processor sum — see [[SimpleSystem.stages]] —
+    * and every step's lineage is cut at the materialization. State
+    * after the step is identical to [[step]]'s: disjoint processors
+    * commute, chained ones already share one plan per archetype.
     */
-  def stepEager(dt: Double): Unit = {
-    val updates = system.execute(currentStep, dt)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val mat = Await.result(
-      Future.traverse(updates.toSeq) { case (h, df) =>
-        Future(h -> df.localCheckpoint(eager = true))
-      }, scala.concurrent.duration.Duration(10, "min")).toMap
-    advance(mat)
-  }
+  def stepEager(dt: Double): Unit =
+    advance(ArchetypeStore.concurrently(store.spark, system.execute(currentStep, dt).toSeq) {
+      case (h, df) => h -> df.localCheckpoint(eager = true)
+    }.toMap)
 
   /** Commit one step's updates at `currentStep + 1`, move to that step
     * and compact every `optimizeInterval` steps.

@@ -45,6 +45,22 @@ object GraftBridge {
       org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone())
   }
 
+  /** A copy of the calling thread's SparkContext local properties
+    * (`getLocalProperties` is `private[spark]`).
+    */
+  def localProperties(sc: org.apache.spark.SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  /** `body` under a copy of `props` as this thread's local properties;
+    * the thread's own are restored afterwards.
+    */
+  def withLocalProperties[T](sc: org.apache.spark.SparkContext,
+      props: java.util.Properties)(body: => T): T = {
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+    try body finally sc.setLocalProperties(own)
+  }
+
   /** The materialized RDD behind a (local)checkpointed DataFrame, for
     * explicit block release — `Dataset.unpersist` doesn't reach
     * checkpoint blocks (they aren't in the CacheManager).

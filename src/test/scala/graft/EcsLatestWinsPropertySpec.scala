@@ -10,20 +10,22 @@ import org.scalacheck.rng.Seed
 
 import scala.collection.mutable
 
-/** Random mixes of spawnBatch, spawnAt, World.step, step-less upsert and
-  * despawnWhere against an in-test merge-insert model keyed on
-  * (entity_id, step) (reference: store.py:250-256). Whichever read
-  * path the store picks — the append log as is, or the latest-wins
-  * window — `getHistory` and `World.query` must equal the model.
+/** Random mixes of spawnBatch, spawnAt, World.step, World.stepEager,
+  * step-less upsert, despawnWhere and optimize against an in-test
+  * merge-insert model keyed on (entity_id, step) (reference:
+  * store.py:250-256). Whichever read path the store picks — the
+  * append log's per-step frames, or the latest-wins window —
+  * `getHistory` and `World.query` at every step must equal the model.
   */
 class EcsLatestWinsPropertySpec extends SparkSpec {
 
   private sealed trait Op
   private final case class SpawnBatch(ids: Seq[Long], x: Double) extends Op
   private final case class SpawnAt(step: Long, x: Double) extends Op
-  private case object Step extends Op
+  private final case class Step(eager: Boolean) extends Op
   private final case class Upsert(step: Long, ids: Seq[Long], x: Double) extends Op
   private final case class DespawnWhere(residue: Int) extends Op
+  private case object Optimize extends Op
 
   // ids 1..5 overlap the counter's first ids, so spawnAt can hit a
   // spawnBatch key; steps 0..3 reach both held and future steps
@@ -33,9 +35,11 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
   private val op: Gen[Op] = Gen.frequency(
     3 -> (for (i <- ids; v <- x) yield SpawnBatch(i, v)),
     2 -> (for (s <- step; v <- x) yield SpawnAt(s, v)),
-    4 -> Gen.const(Step),
+    3 -> Gen.const(Step(eager = false)),
+    1 -> Gen.const(Step(eager = true)),
     1 -> (for (s <- step; i <- ids; v <- x) yield Upsert(s, i, v)),
-    1 -> Gen.choose(0, 2).map(DespawnWhere(_)))
+    1 -> Gen.choose(0, 2).map(DespawnWhere(_)),
+    1 -> Gen.const(Optimize))
 
   private object PlusOne extends Processor {
     val components: Seq[ComponentMeta] = Seq(PosMeta)
@@ -64,12 +68,12 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
         is.foreach(i => model((i, world.currentStep)) = (v + i, true))
       case SpawnAt(s, v) =>
         model((world.spawnAt(s, Position(v, 0.0)), s)) = (v, true)
-      case Step =>
+      case Step(eager) =>
         val from = world.currentStep
         val next = model.collect {
           case ((i, `from`), (v, true)) => (i, from + 1) -> (v + 1, true)
         }
-        world.step(1.0)
+        if (eager) world.stepEager(1.0) else world.step(1.0)
         model ++= next
       case Upsert(s, is, v) =>
         world.store.upsert(hash, spark.createDataFrame(
@@ -81,6 +85,8 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
         model.foreach { case (k @ (i, _), (v, live)) =>
           if (live && i % 3 == r) model(k) = (v, false)
         }
+      case Optimize =>
+        world.store.optimize()
     }
     val history = world.getHistory(pos)(hash)
     val gotHistory = history
@@ -88,17 +94,17 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
       .as[(Long, Long, Double, Boolean)].collect().toSeq.sorted
     val wantHistory = model.toSeq
       .map { case ((i, s), (v, live)) => (i, s, v, live) }.sorted
-    val gotLive = world.query(pos)(hash)
+    val gotLive = (0L to world.currentStep).map(s => s -> world.query(pos, Some(s))(hash)
       .select(col("entity_id"), col("position__x")).as[(Long, Double)]
-      .collect().toSeq.sorted
-    val wantLive = model.toSeq.collect {
-      case ((i, s), (v, true)) if s == world.currentStep => (i, v)
-    }.sorted
+      .collect().toSeq.sorted)
+    val wantLive = (0L to world.currentStep).map(s => s -> model.toSeq.collect {
+      case ((i, `s`), (v, true)) => (i, v)
+    }.sorted)
     val windowed = history.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.nonEmpty
     val prop = ((gotHistory == wantHistory) :| s"history $gotHistory != model $wantHistory") &&
-      ((gotLive == wantLive) :| s"query $gotLive != model $wantLive")
+      ((gotLive == wantLive) :| s"query by step $gotLive != model $wantLive")
     (prop :| s"ops $ops", windowed)
   }
 

@@ -728,6 +728,66 @@ class EcsSpec extends SparkSpec {
     assertWindows("attachDurable", durable, pos, 0L, expected = true)
   }
 
+  /** Nodes in a DataFrame's analyzed plan. */
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect { case n => n }.size
+
+  test("a step's query plans only its frame: plan size grows at most linearly in the step") {
+    // without compaction, step k's frame is a chain of k processor
+    // applications back to the spawn; a query that plans the whole
+    // append log instead doubles each step (the log's plan holds the
+    // previous log twice: as itself and under the new frame)
+    val w = World.make(spark, "sim_test", "run_plan_linear", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
+      .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+    val nodes = (0 to 8).map { k =>
+      if (k > 0) w.step(0.5)
+      planNodes(w.query(PosVel).values.head)
+    }
+    info(s"World.query analyzed-plan nodes at steps 0..8: ${nodes.mkString(", ")}")
+    val (a, b) = (10, 16)
+    nodes.zipWithIndex.foreach { case (n, k) =>
+      assert(n <= a * k + b, s"step $k: $n plan nodes > ${a}·$k + $b; all: $nodes")
+    }
+    assert(w.query(PosVel).values.head.orderBy("entity_id")
+      .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(5.0, 5.0))
+  }
+
+  test("stepEager and optimize run their jobs under the caller's local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val w = World.make(spark, "sim_test", "run_local_props", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawn(Position(0.0, 0.0), Velocity(1.0, 0.0))
+    w.spawn(Position(0.0, 0.0), Velocity(1.0, 0.0), Heat(1.0))
+    assert(w.store.matchingHashes(PosVel).size == 2)
+    // pool threads created now copy this thread's properties as they are
+    w.stepEager(0.5)
+    val (group, key, tag) = ("graft-local-props", "graft.test.tag", "fresh")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[java.util.Properties]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(Option(e.properties))
+    }
+    sc.setJobGroup(group, "stepEager and optimize")
+    sc.setLocalProperty(key, tag)
+    sc.addSparkListener(listener)
+    try {
+      w.stepEager(0.5)
+      w.store.optimize()
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+      sc.setLocalProperty(key, null)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq.map(_.map(p =>
+      (p.getProperty("spark.jobGroup.id"), p.getProperty(key))))
+    assert(seen.size >= 4, s"two stepEager and two optimize jobs at least, saw $seen")
+    assert(seen.forall(_.contains((group, tag))), s"jobs without the caller's properties: $seen")
+  }
+
   test("queryNeighbors: IVF over a live component column respects despawns") {
     import org.apache.spark.sql.functions._
     val world = World.make(spark, "sim_test", "run_vecsearch_spec")
