@@ -225,10 +225,8 @@ object DedupQueries {
         """transform(sequence(0, 7), b -> aggregate(sequence(b*8, b*8+7), 0L,
           | (acc, j) -> acc ^ ((element_at(sig, j+1) * 131 + j) % 1000000007)))"""
           .stripMargin)).as(Seq("band_id", "band_hash")))
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band_id"), col("band_hash")).orderBy(col("doc_id"))
-    val pool = bands.withColumn("prn", row_number().over(wB))
-      .filter(col("prn") <= 256)
+    val pool = graft.operators.CappedPool
+      .lowest(bands, Seq("band_id", "band_hash"), "doc_id", 256)
       .select(col("band_id"), col("band_hash"), col("doc_id").as("id_a"))
     val pairs = pool
       .join(bands.select(col("band_id"), col("band_hash"), col("doc_id").as("id_b")),
@@ -370,8 +368,9 @@ object DedupQueries {
       .transform(QueryShape.stagedSort(_, col("id_a"), col("id_b")))
 
   /** C3's pair pipeline with the pool cap exposed (production cap =
-    * 256; DedupCapProbe measures the recall-vs-cap curve at sf1 so
-    * the constant is evidence, not folklore).
+    * 256; the recall-vs-cap curve at sf1 is in
+    * `bench/dedup_cap_probe.json`, so the constant is evidence, not
+    * folklore).
     *
     * PIECE LAYOUT (r10, the r9 verdict's documented knob): 5 pieces
     * (4×13 + 1×12 bits) → 10 piece-PAIR tables of ≤ 26-bit keys,
@@ -402,41 +401,23 @@ object DedupQueries {
         }: _*)).as("pk"))
       .select(col("doc_id"), col("simhash"),
         col("pk.tbl").as("tbl"), col("pk.key").as("key"))
-    // BOUNDED pool per (tbl, key) — the r8 sf10 diagnostic measured
-    // sum(df^2) = 49G over piece-pair keys on the 500k-doc corpus
-    // (statistically-twinned same-language docs concentrate even
-    // wide keys: max df 431k at sf100 for 26-bit keys), so the
-    // uncapped join is quadratic in practice. A pair survives iff its
-    // LOWER id ranks <= cap in some shared key (within one key b in
-    // pool => a in pool); the rank is deterministic and replayed by
-    // the oracle. Pairs in the capped blind spot are mass near-dup
-    // families — C1/C2's regime, the same contract as winnowing's
-    // maxDf.
+    // A [[graft.operators.CappedPool]] per (tbl, key): the r8 sf10
+    // diagnostic measured sum(df^2) = 49G over piece-pair keys on the
+    // 500k-doc corpus (statistically-twinned same-language docs
+    // concentrate even wide keys: max df 431k at sf100 for 26-bit
+    // keys), so the uncapped join is quadratic in practice. Pairs in
+    // the capped blind spot are mass near-dup families — C1/C2's
+    // regime, the same contract as winnowing's df cap.
     //
-    // PACKED-POOL + CANONICAL-TABLE emission (r10, the dedup_embedding
-    // treatment — forced by the sf100 probe, where the plain (tbl,key)
-    // equi-join materialized ~10G candidate joined rows and hot keys
-    // serialized into single SMJ key-group tasks, 157 s): the pool
-    // packs ONE ROW PER KEY (24 B members), each probe row meets
-    // exactly one packed row map-side, SimhashPoolMatchesExpr runs the
-    // xor+popcount loop in-task, and a pair emits only at its first
-    // shared-pooled table — no distinct over the emitted set, no
-    // duplicate scoring, and a 431k-row hot key costs one streamed
-    // 6 KB broadcast-equivalent row instead of one straggler task.
-    // Output set == the old distinct pool join's
-    // (SimhashPackedParitySpec pins it with a binding cap).
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("tbl"), col("key")).orderBy(col("doc_id"))
-    val pooled = keyed.withColumn("prn", row_number().over(wK))
-      .filter(col("prn") <= cap)
-      .drop("prn")
-      .localCheckpoint(true)
-    val mask = pooled.groupBy(col("doc_id"))
-      .agg(bit_or(expr("shiftleft(1L, tbl)")).as("poolmask"))
-    val packed = pooled.join(broadcast(mask), Seq("doc_id"))
-      .groupBy(col("tbl"), col("key"))
-      .agg(collect_list(struct(col("doc_id").as("id"),
-        col("simhash").as("sig"), col("poolmask"))).as("pool"))
+    // PACKED: the plain (tbl, key) equi-join materialized ~10G
+    // candidate joined rows at sf100, and hot keys serialized into
+    // single SMJ key-group tasks (157 s). Packed, each probe row meets
+    // one 24 B-per-member pool row map-side, SimhashPoolMatchesExpr runs
+    // the xor+popcount loop in-task, and a 431k-row hot key streams
+    // instead of straggling one task. Output set == the distinct pool
+    // join's (SimhashPackedParitySpec pins it with a binding cap).
+    val packed = graft.operators.CappedPool.packed(keyed, "key", "doc_id", cap,
+      col("simhash").as("sig"))
     val matches = org.apache.spark.sql.GraftBridge.column(
       graft.functions.SimhashPoolMatchesExpr(
         org.apache.spark.sql.GraftBridge.expression(col("sh_b")),
@@ -785,16 +766,6 @@ object DedupQueries {
     // content, not once per copy.
     val reps = docs(s, dir).groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-    winnowingPairs(reps, maxDf = 256)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** C4's fp-bucket pair pipeline with the absolute df cap exposed
-    * (production maxDf = 256; DedupCapProbe records the pairs-vs-cap
-    * curve at sf1 so the constant is evidence, not folklore).
-    */
-  private[graft] def winnowingPairs(reps: DataFrame, maxDf: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     val fpCol = GraftBridge.column(graft.functions.WinnowFingerprintExpr(
       GraftBridge.expression(lower(col("text"))), 8, 4))
     val fps = reps.select(col("doc_id"), explode(fpCol).as("fp"))
@@ -810,6 +781,8 @@ object DedupQueries {
     // near-dup family larger than maxDf is dropped here — that regime
     // belongs to C1 exact collapse + C2 MinHash banding. maxDf doesn't
     // bind below n = 5120 docs, so small-SF oracles are unchanged.
+    // (The pairs-vs-maxDf curve at sf1 is in bench/dedup_cap_probe.json.)
+    val maxDf = 256
     val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") * 20 <= col("n") && col("df") <= maxDf)
@@ -821,6 +794,7 @@ object DedupQueries {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= 10) // bimodal at sf0.01: real dups >= 10, template noise <= 8
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   private val dedupWinnowingSql = {
@@ -1289,11 +1263,12 @@ object DedupQueries {
       .agg(coalesce(sum(expr("nf * (nf - 1) DIV 2")), lit(0L)))
       .collect()(0).getLong(0) // one scalar: Σ C(n_f, 2)
     // First-collision emission (r10, second iteration): the family
-    // collapse alone did NOT survive sf100 — ScaleDiag measured the
-    // cross-family r=4 buckets at Σ C(df,2) ≈ 2.5G pair occurrences
-    // (80M band rows, sum_df² 5.06G, hottest bucket 9197), and the
-    // `.distinct()` that deduped a pair colliding in several bands
-    // shuffled ALL of them (>100 GB spill → ENOSPC). Instead each
+    // collapse alone did NOT survive sf100 — the sf100 probe
+    // (SURVEY.md, OPTIMIZATION_r10.md) measured the cross-family r=4
+    // buckets at Σ C(df,2) ≈ 2.5G pair occurrences (80M band rows,
+    // sum_df² 5.06G, hottest bucket 9197), and the `.distinct()` that
+    // deduped a pair colliding in several bands shuffled ALL of them
+    // (>100 GB spill → ENOSPC). Instead each
     // (slot, band_hash) row now carries the PREFIX of its r-group's
     // earlier band hashes (avg 7.5 ints for r=4), and a pair is
     // emitted only at its FIRST colliding slot — `exists(zip_with(…))`

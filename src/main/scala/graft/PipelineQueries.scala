@@ -656,19 +656,16 @@ object PipelineQueries {
     // BOUNDED within-cluster pool (the r8 sf10 probe measured the
     // uncapped cid self-join at 52.7× for 10× data — pair volume is
     // n²/K with K fixed at 16): each rep tests against only the
-    // cluster's 256 lowest-id reps. The pool is ≤ K·256 rows, so it
-    // BROADCASTS and the dup decision is ONE linear map-side pass
-    // over the corpus — no quadratic shuffle anywhere. Within the
-    // capped contract a rep is dropped iff it is near (4dp cos ≥ 0.3)
-    // a lower-id rep among those 256; the rank is deterministic,
-    // oracle-mirrored, and never binds at test SFs (clusters ≪ 256).
+    // cluster's [[graft.operators.CappedPool]] of 256 lowest-id reps.
+    // The pool is ≤ K·256 rows, so it BROADCASTS and the dup decision
+    // is ONE linear map-side pass over the corpus — no quadratic
+    // shuffle anywhere. Within the capped contract a rep is dropped iff
+    // it is near (4dp cos ≥ 0.3) a lower-id rep among those 256.
     // (Production SemDeDup grows K with the corpus instead — with
     // bounded cells the cap is equivalent; with fixed seeds it is the
     // skew guard.)
-    val wC = Window.partitionBy(col("cid")).orderBy(col("rep_id"))
-    val pool = m.select(col("cid"), col("rep_id"), col("v"))
-      .withColumn("prn", row_number().over(wC))
-      .filter(col("prn") <= 256)
+    val pool = graft.operators.CappedPool
+      .lowest(m.select(col("cid"), col("rep_id"), col("v")), Seq("cid"), "rep_id", 256)
       .select(col("cid"), col("rep_id").as("pool_id"), col("v").as("pool_v"))
     val dup = m.select(col("rep_id"), col("v"), col("cid"))
       .join(broadcast(pool), Seq("cid"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Plan-shape helpers shared across the query suites. */
 object QueryShape {
@@ -28,4 +28,23 @@ object QueryShape {
     */
   def bucketCount(quantity: Long, perBucket: Long): Int =
     math.max(8L, math.min(512L, quantity / perBucket)).toInt
+
+  /** `f` over `items` as concurrent Spark jobs, one future each. A pool
+    * thread keeps the SparkContext local properties it was created
+    * with, so each task runs under a copy of the caller's instead: job
+    * group, description, scheduler pool and custom tags then reach
+    * these jobs, and a `cancelJobGroup` cancels them. A failed job
+    * throws here.
+    */
+  private[graft] def concurrently[A, B](spark: SparkSession, items: Seq[A])(
+      f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import org.apache.spark.sql.GraftBridge
+    val sc = spark.sparkContext
+    val props = GraftBridge.localProperties(sc)
+    Await.result(
+      Future.traverse(items)(a => Future(GraftBridge.withLocalProperties(sc, props)(f(a)))),
+      scala.concurrent.duration.Duration.Inf)
+  }
 }

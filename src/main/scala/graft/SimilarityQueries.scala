@@ -847,12 +847,8 @@ object SimilarityQueries {
     // the two greedy chains are independent job sequences — run them
     // CONCURRENTLY (each round is a tiny checkpointed job, so the wall
     // cost is scheduler latency, which overlapping halves)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val (bruteSel, ivfSel) = Await.result(
-      Future(mmrSelect(brutePool)).zip(Future(mmrSelect(ivfPool))),
-      Duration.Inf)
+    val Seq(bruteSel, ivfSel) =
+      QueryShape.concurrently(s, Seq(brutePool, ivfPool))(mmrSelect(_))
     // certify the composition: full selection per query, mean relevance
     // within 0.05 of the exact path (macro over queries)
     val ok = bruteSel.groupBy(col("qid"))

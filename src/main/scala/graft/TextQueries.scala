@@ -547,18 +547,14 @@ object TextQueries {
       .join(predLang(s, dir), Seq("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     docWords.count() // fill the cache once before the parallel encoders hit it
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val encoded = Await.result(
-      Future.sequence(BpeLangs.map { lang => Future {
-        val wordCounts = docWords.filter(col("pred_lang") === lang)
-          .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-        val merges = graft.operators.BpeTrainer.Artifacts
-          .mergesFor(wordCounts, s"bpe:$dir:lang=$lang", PerLangMerges)
-        graft.operators.BpeTrainer.encode(wordCounts.select(col("word")), merges)
-          .withColumn("pred_lang", lit(lang))
-      }}), scala.concurrent.duration.Duration(10, "min"))
-      .reduce(_ unionByName _)
+    val encoded = QueryShape.concurrently(s, BpeLangs) { lang =>
+      val wordCounts = docWords.filter(col("pred_lang") === lang)
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+      val merges = graft.operators.BpeTrainer.Artifacts
+        .mergesFor(wordCounts, s"bpe:$dir:lang=$lang", PerLangMerges)
+      graft.operators.BpeTrainer.encode(wordCounts.select(col("word")), merges)
+        .withColumn("pred_lang", lit(lang))
+    }.reduce(_ unionByName _)
     val out = docWords.join(encoded, Seq("pred_lang", "word"))
       .groupBy(col("pred_lang"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),

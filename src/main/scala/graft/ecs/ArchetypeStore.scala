@@ -341,12 +341,13 @@ final class ArchetypeStore(
     * version, not the resolved view) and cut its lineage (the analogue
     * of LanceDB `table.optimize()`). Call every few steps in a long loop.
     * The archetypes materialize as concurrent jobs, each under the
-    * caller's SparkContext local properties ([[concurrently]]). Every
-    * frame of a window-free log is then re-pointed at its step of the
-    * new snapshot, and only after that are the previous compaction's
-    * checkpoint blocks released — a frame left on the old snapshot
-    * would read freed blocks. Long simulations so hold at most one
-    * snapshot per archetype.
+    * caller's SparkContext local properties
+    * ([[graft.QueryShape.concurrently]]). Every frame of a window-free
+    * log is then re-pointed at its step of the new snapshot, and only
+    * after that are the previous compaction's checkpoint blocks
+    * released — a frame left on the old snapshot would read freed
+    * blocks. Long simulations so hold at most one snapshot per
+    * archetype.
     *
     * With `reliableCheckpoints` the snapshot goes to the session's
     * checkpoint directory (HDFS/object store on a cluster) instead of
@@ -361,7 +362,7 @@ final class ArchetypeStore(
       require(spark.sparkContext.getCheckpointDir.isDefined,
         "reliableCheckpoints requires SparkContext.setCheckpointDir")
     val logs = tables.toSeq
-    val snapshots = concurrently(spark, logs) { case (_, log) =>
+    val snapshots = graft.QueryShape.concurrently(spark, logs) { case (_, log) =>
       if (reliableCheckpoints) log.df.checkpoint(eager = true)
       else log.df.localCheckpoint(true)
     }
@@ -764,23 +765,6 @@ object ArchetypeStore {
   private def resolveKeepVersion(log: Log, scope: org.apache.spark.sql.Column): DataFrame = {
     val scoped = log.df.filter(scope)
     if (log.frames.isDefined) scoped else latestWinsKeepVersion(scoped)
-  }
-
-  /** `f` over `items` as concurrent Spark jobs, one future each. A pool
-    * thread keeps the SparkContext local properties it was created
-    * with, so each task runs under a copy of the caller's instead: job
-    * group, description, scheduler pool and custom tags then reach
-    * these jobs, and a `cancelJobGroup` cancels them.
-    */
-  private[ecs] def concurrently[A, B](spark: SparkSession, items: Seq[A])(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import org.apache.spark.sql.GraftBridge
-    val sc = spark.sparkContext
-    val props = GraftBridge.localProperties(sc)
-    Await.result(
-      Future.traverse(items)(a => Future(GraftBridge.withLocalProperties(sc, props)(f(a)))),
-      scala.concurrent.duration.Duration.Inf)
   }
 
   private def withVersion(s: org.apache.spark.sql.types.StructType) =

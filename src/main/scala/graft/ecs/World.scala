@@ -117,14 +117,14 @@ final class World private (
   /** One step whose per-archetype updates MATERIALIZE as concurrent
     * Spark jobs (eager localCheckpoint per archetype, one future
     * each, under the caller's local properties — see
-    * [[ArchetypeStore.concurrently]]): wall time is the DAG's critical
+    * [[graft.QueryShape.concurrently]]): wall time is the DAG's critical
     * path instead of the processor sum — see [[SimpleSystem.stages]] —
     * and every step's lineage is cut at the materialization. State
     * after the step is identical to [[step]]'s: disjoint processors
     * commute, chained ones already share one plan per archetype.
     */
   def stepEager(dt: Double): Unit =
-    advance(ArchetypeStore.concurrently(store.spark, system.execute(currentStep, dt).toSeq) {
+    advance(graft.QueryShape.concurrently(store.spark, system.execute(currentStep, dt).toSeq) {
       case (h, df) => h -> df.localCheckpoint(eager = true)
     }.toMap)
 

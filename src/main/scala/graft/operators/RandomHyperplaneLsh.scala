@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.VectorOps
 
@@ -27,22 +27,11 @@ import graft.VectorOps
   * Scale shape: candidate generation is an equi-join on
   * `(table, bucket)` — no all-pairs product anywhere. Expected bucket
   * occupancy is `n / 2^bits` per table; at larger corpora raise
-  * `bits` (and `tables` to hold recall). Pair verification re-joins
-  * ids to vectors — two keyed shuffles — rather than carrying vector
-  * payloads through the distinct.
+  * `bits` (and `tables` to hold recall). Each bucket's candidates are
+  * capped by [[CappedPool]], and verification scores the vectors where
+  * the candidates meet: no id pair is re-joined to its vectors.
   */
 object RandomHyperplaneLsh {
-
-  /** Plane `p` as an integer-valued double array (see formula above). */
-  def hyperplane(p: Int, dim: Int): Array[Double] =
-    Array.tabulate(dim)(d => (((1103L * (p.toLong * dim + d) + 12289L) % 8191L) - 4095L).toDouble)
-
-  /** The `bits`-bit sign bucket of `v` in table `tbl` (long column). */
-  def bucket(v: Column, tbl: Int, bits: Int, dim: Int): Column =
-    (0 until bits).map { j =>
-      when(VectorOps.dot(v, typedlit(hyperplane(tbl * bits + j, dim))) >= 0,
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** One row per (input row × table): `idCol`, vecCol as `v`, `tbl`,
     * `bucket`. The equi-join surface for candidate generation. All
@@ -63,72 +52,29 @@ object RandomHyperplaneLsh {
       posexplode(codes).as(Seq("tbl", "bucket")))
   }
 
-  /** Distinct unordered candidate pairs (`id_a < id_b`) that share at
-    * least one (table, bucket), with the LOWER id inside the bucket's
-    * `bucketCap`-lowest-id pool. Uncapped, per-bucket pair volume is
-    * |bucket|² — the r8 sf10 probe OOM'd a single join task on the
-    * 2M-row corpus, where jittered near-copies co-bucket en masse;
-    * capped, worst-case volume is n·tables·bucketCap regardless of
-    * skew (the knnGraph contract applied to pair generation). The
-    * rank is deterministic (row_number by id) and SQL-replayable, so
-    * oracles mirror the same pool filter; it never binds at test SFs.
-    * A pair (a < b) survives iff a ranks ≤ cap in some shared bucket —
-    * within one bucket b ∈ pool ⇒ a ∈ pool, so pooling only the
-    * lower side loses nothing.
-    */
-  def candidatePairs(e: DataFrame, idCol: String, vecCol: String,
-      tables: Int, bits: Int, dim: Int, bucketCap: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bk = bucketed(e, idCol, vecCol, tables, bits, dim)
-      .select(col("tbl"), col("bucket"), col(idCol))
-    val wB = Window.partitionBy(col("tbl"), col("bucket")).orderBy(col(idCol))
-    val pool = bk.withColumn("prn", row_number().over(wB))
-      .filter(col("prn") <= bucketCap)
-      .select(col("tbl"), col("bucket"), col(idCol).as("id_a"))
-    pool.join(bk.select(col("tbl"), col("bucket"), col(idCol).as("id_b")),
-        Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-  }
-
   /** Corpus-wide near-duplicate pairs: LSH candidates verified by
     * exact cosine ≥ `threshold` (4-dp rounded). Output
     * `(id_a, id_b, cos_sim)` ordered by ids.
     *
-    * Verification runs INSIDE the bucket join — both sides carry
-    * their vector through the (tbl, bucket) shuffle (n·tables rows,
-    * ~0.5 KB each) and every candidate's cosine + threshold test
-    * evaluates in the join task, so candidate pairs are never
-    * materialized beyond the stream. The distinct (a pair can collide
-    * in several tables; identical inputs give bit-identical cosines)
-    * sees only THRESHOLD-PASSING rows. The alternative — distinct the
-    * id pairs first, then attach vectors by two keyed joins — re-sorts
-    * the full candidate set with a 0.5 KB payload glued on: the r8
-    * sf10 probe filled the DISK spilling ~200 GB of exactly that sort
-    * before dying. Duplicate cross-table cosine evaluations are the
-    * price, bounded by bucketCap·tables per row — cheap codegen'd
-    * arithmetic against a join that needs no giant sort anywhere.
+    * Each (tbl, bucket) pool of at most `bucketCap` lowest-id members
+    * (float vector, precomputed norm and codes each) is one
+    * [[CappedPool.packed]] row, so every probe row meets exactly one
+    * packed row and `LshPoolMatchesExpr` scores its members in-task:
+    * only threshold-passing pairs ever become rows. The expression
+    * emits a pair only at its first shared pooled table (the
+    * `poolmask`), so no distinct runs and no cross-table collision is
+    * scored twice; the emitted set is the capped pool join's
+    * (LshRecallSpec pins it against a naive pool join). Float carry is
+    * value-exact for float32-origin vectors, and `na·nb` is the
+    * oracle's `sqrt(dot)·sqrt(dot)` sequence.
     */
   def nearDupPairs(e: DataFrame, idCol: String, vecCol: String,
       threshold: Double, tables: Int = 8, bits: Int = 8, dim: Int = 64,
       bucketCap: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.GraftBridge
-    // PACKED-POOL scoring (r10, forced by the sf100 probe): the bucket
-    // pool (≤ bucketCap lowest-id members, float vector + precomputed
-    // norm each) packs into ONE ROW PER (tbl, bucket), so the
-    // candidate "join" is 1:1 — each probe row meets exactly one
-    // packed row, and LshPoolMatchesExpr loops the members in-task.
-    // The previous in-join scoring still materialized a ~600 B joined
-    // row per candidate BEFORE the cosine filter: on this corpus's
-    // hot buckets (clustered embeddings concentrate 20-75k vectors
-    // per key regardless of bits — measured by ScaleDiag at sf100)
-    // that was 3.2G candidate rows ≈ 1.9 TB of row churn, 251-463 s
-    // for ~200 GFLOP of math. Packed, the same candidates cost one
-    // widened-float fused loop each and only threshold-PASSING pairs
-    // become rows. Float carry is value-exact for this float32-origin
-    // corpus, and na·nb is the oracle's sqrt(dot)·sqrt(dot) sequence.
+    // Packed, because clustered embeddings put 20-75k vectors in a
+    // bucket regardless of bits: one joined row per candidate was 3.2G
+    // rows (~1.9 TB of row churn) at sf100 (OPTIMIZATION_r10.md).
     val codesCol = GraftBridge.column(
       graft.functions.HyperplaneBucketsExpr(
         GraftBridge.expression(col(vecCol)), tables, bits, dim))
@@ -138,38 +84,13 @@ object RandomHyperplaneLsh {
       codesCol.as("codes"))
       .select(col(idCol), col("vf"), col("nrm"), col("codes"),
         posexplode(col("codes")).as(Seq("tbl", "bucket")))
-    val wB = Window.partitionBy(col("tbl"), col("bucket")).orderBy(col(idCol))
-    // pooled rows materialize once (they feed both the poolmask agg
-    // and the packing — unmaterialized, the window would execute
-    // twice); at cluster scale this is a persist of n·tables rows
-    val pooled = bk.withColumn("prn", row_number().over(wB))
-      .filter(col("prn") <= bucketCap)
-      .drop("prn")
-      .localCheckpoint(true)
-    // poolmask: bit t set = the id is inside table t's capped pool (of
-    // whatever bucket it lands in there). Small frame (one row per
-    // id), broadcast back into the packing so no second exchange of
-    // the vector-carrying pooled rows is needed.
-    val mask = pooled.groupBy(col(idCol))
-      .agg(bit_or(expr("shiftleft(1L, tbl)")).as("poolmask"))
-    // the groupBy reuses the window's (tbl, bucket) exchange — packing
-    // adds no shuffle; collect_list order is the sorted window output
-    // (irrelevant anyway: every member is scored)
-    val packed = pooled.join(broadcast(mask), Seq(idCol))
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(collect_list(struct(col(idCol).as("id"), col("vf"),
-        col("nrm"), col("codes"), col("poolmask"))).as("pool"))
+    val packed = CappedPool.packed(bk, "bucket", idCol, bucketCap,
+      col("vf"), col("nrm"), col("codes"))
     val matches = GraftBridge.column(graft.functions.LshPoolMatchesExpr(
       GraftBridge.expression(col("vb")), GraftBridge.expression(col("nb")),
       GraftBridge.expression(col("id_b")), GraftBridge.expression(col("cb")),
       GraftBridge.expression(col("tbl")), GraftBridge.expression(col("pool")),
       threshold - 1e-4))
-    // CANONICAL-TABLE emission inside the expression means every
-    // unordered pair surfaces exactly once across the 8-table fan-out
-    // — no distinct over the (at decade 4: hundreds of millions of
-    // rows) emitted pair set, and no duplicate scoring of cross-table
-    // collisions. The emitted set equals the old distinct's set;
-    // LshRecallSpec pins the equivalence against a naive pool join.
     bk.select(col("tbl"), col("bucket"), col(idCol).as("id_b"),
         col("vf").as("vb"), col("nrm").as("nb"), col("codes").as("cb"))
       .join(packed, Seq("tbl", "bucket"))
@@ -352,21 +273,11 @@ object RandomHyperplaneLsh {
       .filter(col("rn") <= k)
   }
 
-  /** All-pairs k-NN GRAPH over one corpus: same bucket-candidate
-    * generation as [[knn]], but the bucket join is a plain SHUFFLE
-    * equi-join — when the "query" side is the whole corpus there is
-    * nothing small to broadcast, and bucket co-residency (not n²)
-    * still bounds the candidate volume. Returns every node's top-k
-    * directed edges (qid, rn, nid, cos_sim).
-    */
-  def knnGraph(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, tables: Int = 8, bits: Int = 8, dim: Int = 64,
-      bucketCap: Int = 128): DataFrame =
-    knnGraphEdges(corpus, idCol, vecCol, k, tables, bits, dim, bucketCap)
-      .select(col("qid"), col("rn"), col("nid"),
-        (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
-
-  /** [[knnGraph]] with the cos column RAW (unrounded) — the form the
+  /** All-pairs k-NN GRAPH over one corpus: every node's top-k directed
+    * edges `(qid, rn, nid, cos)`. Candidates are bucket-mates as in
+    * [[knn]], but the bucket join is a plain shuffle equi-join: the
+    * "query" side is the whole corpus, so there is nothing small to
+    * broadcast. The cos column is RAW (unrounded), the form the
     * NN-descent refinement merges with newly scored candidates so
     * ranking never mixes rounded and unrounded keys.
     */
@@ -374,8 +285,7 @@ object RandomHyperplaneLsh {
       k: Int, tables: Int = 8, bits: Int = 8, dim: Int = 64,
       bucketCap: Int = 128): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // IN-JOIN scoring (the nearDupPairs shape, forced here by the r9
-    // sf100 probe): the previous id-only candidate set + two vector
+    // IN-JOIN scoring (forced by the r9 sf100 probe): the previous id-only candidate set + two vector
     // attach joins re-shuffled every candidate PAIR with a 256-byte
     // vector glued on — n·tables·bucketCap pairs ≈ 512M at sf100,
     // ~150 GB of shuffle per attach join, which filled the disk and
@@ -388,17 +298,10 @@ object RandomHyperplaneLsh {
     // cross-table distinct stays safe on the triple: the same pair
     // scores bit-identically in every table it collides in.
     //
-    // BOUNDED candidate pool per bucket: each node compares against at
-    // most the `bucketCap` lowest-id members of each of its buckets
-    // (deterministic, SQL-replayable rank). Without the cap, per-bucket
-    // work is |bucket|² — a single pathological bucket (boilerplate
-    // vectors, a mass near-dup family) owns one task and the whole
-    // stage at 100 TB; with it, worst-case candidate volume is
-    // n·tables·bucketCap — a hard bound independent of skew. Top-k
-    // quality is unaffected where buckets are smaller than the cap
-    // (every test SF), and inside a capped hot bucket the pool members
-    // are mutually near by LSH construction, so ranked top-k remains a
-    // faithful ANN answer. The oracle mirrors the same rank filter.
+    // Each node compares against its buckets' [[CappedPool]] of
+    // `bucketCap` lowest ids. Inside a capped hot bucket the pool
+    // members are mutually near by LSH construction, so the ranked
+    // top-k remains a faithful ANN answer.
     val codes = org.apache.spark.sql.GraftBridge.column(
       graft.functions.HyperplaneBucketsExpr(
         org.apache.spark.sql.GraftBridge.expression(col(vecCol)),
@@ -407,9 +310,7 @@ object RandomHyperplaneLsh {
       col(vecCol).cast("array<float>").as("vf"),
       VectorOps.norm(col(vecCol)).as("nrm"),
       posexplode(codes).as(Seq("tbl", "bucket")))
-    val wB = Window.partitionBy(col("tbl"), col("bucket")).orderBy(col(idCol))
-    val pool = bk.withColumn("prn", row_number().over(wB))
-      .filter(col("prn") <= bucketCap)
+    val pool = CappedPool.lowest(bk, Seq("tbl", "bucket"), idCol, bucketCap)
       .select(col("tbl"), col("bucket"), col(idCol).as("nid"),
         col("vf").as("nv"), col("nrm").as("nn"))
     val probe = bk.select(col("tbl"), col("bucket"), col(idCol).as("qid"),
