@@ -33,11 +33,16 @@ import scala.jdk.CollectionConverters._
   *    and `optimize()` cuts the log's lineage — the analogue of the
   *    reference's `table.optimize()` — and re-points every frame at
   *    the new snapshot.
-  *  - Persistence is parquet partitioned by (simulation, run), so a
-  *    cluster-scale store partition-prunes on exactly the keys every
-  *    query filters on. `step` arrives sorted within files, so parquet
-  *    min/max row-group stats prune step-range scans (the analogue of
-  *    the reference's BTree index on step, store.py:103-111).
+  *  - Persistence is one append-only commit log per archetype,
+  *    published through a manifest: `commitDelta` writes the rows not
+  *    yet in a directory, `compactDurable` + `vacuumDurable` fold the
+  *    log into a one-commit snapshot, and `attachDurable` reads it back
+  *    with an explicit schema. Commits are parquet partitioned by
+  *    (simulation, run), so a cluster-scale store partition-prunes on
+  *    exactly the keys every query filters on. `step` arrives sorted
+  *    within files, so parquet min/max row-group stats prune step-range
+  *    scans (the analogue of the reference's BTree index on step,
+  *    store.py:103-111).
   */
 final class ArchetypeStore(
     val spark: SparkSession,
@@ -63,10 +68,9 @@ final class ArchetypeStore(
   private val entityCounter = new AtomicLong(0L)
   private val commitCounter = new AtomicLong(0L)
   private val checkpointed = mutable.HashMap.empty[String, DataFrame]
-  // durable-persistence watermarks: highest _v already on disk and the
-  // next commit directory index, per archetype
-  private val durableMaxV = mutable.HashMap.empty[String, Long]
-  private val nextCommit = mutable.HashMap.empty[String, Long]
+  // highest _v of this store's log already in a durable directory, per
+  // (directory, archetype); see the durable protocol below
+  private val durableMaxV = mutable.HashMap.empty[(java.nio.file.Path, String), Long]
 
   def signatures: Map[String, Seq[ComponentMeta]] = sigByHash.toMap
 
@@ -375,24 +379,8 @@ final class ArchetypeStore(
     }
   }
 
-  /** Write every archetype to parquet partitioned by (simulation, run). */
-  def persist(dir: String): Unit = {
-    flush()
-    tables.foreach { case (hash, log) =>
-      resolveKeepVersion(log, lit(true))
-        .withColumn(VersionCol, lit(0L))
-        .repartition(col("simulation"), col("run"))
-        .sortWithinPartitions(col("step"), col("entity_id"))
-        .write.mode("overwrite").partitionBy("simulation", "run")
-        .parquet(s"$dir/$hash")
-      val names = sigByHash(hash).map(_.name).mkString(",")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/$hash.sig"), names)
-    }
-  }
-
   // -------------------------------------------------------------------
-  // Durable incremental persistence (r2, atomic protocol r3):
+  // Durable incremental persistence, the store's only on-disk format:
   // append-only parquet commits published through a manifest.
   //
   // Layout: `$dir/$hash/commit=<n>/simulation=…/run=…/*.parquet` data
@@ -401,16 +389,29 @@ final class ArchetypeStore(
   //
   //   1. write the delta to `$dir/$hash/_staging/<uuid>` (the leading
   //      underscore hides it from Spark's file listing);
-  //   2. atomically rename the staged directory to `commit=<n>`;
+  //   2. atomically rename the staged directory to `commit=<n>`, where
+  //      n = the manifest's `maxCommit` + 1 (0 in a fresh directory),
+  //      read under the directory lock;
   //   3. write the manifest LAST (temp file + atomic rename), moving
   //      `maxCommit` to n and recording the version/entity watermarks.
+  //
+  // Commit bookkeeping lives in two places only. The manifest holds
+  // the directory's watermarks, and they only rise: `maxV` and
+  // `maxEntity` are the max of the previous manifest's and the
+  // writer's counters, so a store that commits a lower count (another
+  // run sharing the directory) never pulls them down. The store holds
+  // one watermark per (directory, archetype): the highest `_v` of its
+  // own log already written there, so a commit to a second directory
+  // writes everything that directory lacks.
   //
   // Readers trust ONLY the manifest: they scan `commit` in
   // [base, maxCommit] with an explicit schema (no footer inference),
   // so a crash at any point leaves either a hidden staging dir or an
   // unreferenced `commit=<n>` dir — both invisible. A retried commit
   // deletes the orphan target before renaming. `attachDurable`
-  // recovers all watermarks from the manifest in O(1) — no table scan.
+  // recovers all watermarks from the manifest in O(1) — no table scan
+  // — and resumes its counters above the tip's, also when it attaches
+  // an older version, so its writes outrank every committed row.
   // Commits below `base` (superseded by compaction) and orphans are
   // dead and can be vacuumed out-of-band.
   // -------------------------------------------------------------------
@@ -570,27 +571,20 @@ final class ArchetypeStore(
       prev.foreach(m => require(m.buckets == bucketCount,
         s"commitDelta: durable dir has bucket layout ${m.buckets}, " +
           s"this store writes $bucketCount — bucket counts must match"))
-      val lastV = durableMaxV.getOrElse(hash, -1L)
+      val key = watermarkKey(dir, hash)
       val highV = commitCounter.get()
-      // never target a commit at-or-below the CURRENT manifest tip: a
-      // store attached at an old version (time travel) that writes
-      // would otherwise reclaim-and-destroy a live newer commit. Its
-      // delta lands ON TOP of the current tip instead.
-      val n = math.max(
-        nextCommit.getOrElse(hash, 0L),
-        prev.map(_.maxCommit + 1).getOrElse(0L))
-      stageCommit(dir, hash, n, log.df.filter(col(VersionCol) > lastV))
-      val names = sigByHash(hash).map(_.name).mkString(",")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/$hash.sig"), names)
+      // always on top of the current tip: a store attached at an old
+      // version (time travel) must not reclaim a live newer commit
+      val n = prev.map(_.maxCommit + 1).getOrElse(0L)
+      stageCommit(dir, hash, n,
+        log.df.filter(col(VersionCol) > durableMaxV.getOrElse(key, -1L)))
       writeManifest(dir, hash, Manifest(
         base = prev.map(_.base).getOrElse(0L),
         maxCommit = n,
-        maxV = highV,
-        maxEntity = entityCounter.get(),
+        maxV = math.max(highV, prev.map(_.maxV).getOrElse(0L)),
+        maxEntity = math.max(entityCounter.get(), prev.map(_.maxEntity).getOrElse(0L)),
         buckets = bucketCount))
-      durableMaxV(hash) = highV
-      nextCommit(hash) = n + 1
+      durableMaxV(key) = highV
     }
   }
 
@@ -609,13 +603,15 @@ final class ArchetypeStore(
         stageCommit(dir, hash, n,
           latestWinsKeepVersion(live.drop("commit")).drop("bucket"))
         writeManifest(dir, hash, m.copy(base = n, maxCommit = n))
-        nextCommit(hash) = n + 1
       }
     }
   }
 
   /** Bucket count this store writes/expects (0 = unbucketed). */
   private def bucketCount: Long = entityBuckets.map(_.toLong).getOrElse(0L)
+
+  private def watermarkKey(dir: String, hash: String) =
+    (java.nio.file.Paths.get(dir).toAbsolutePath.normalize, hash)
 
   /** Durable POINT READ: one entity's resolved step history, pruned to
     * its `bucket=` partition directory when the store is bucketed — the
@@ -668,18 +664,16 @@ final class ArchetypeStore(
 
   /** Attach a durable store written by commitDelta/compactDurable: the
     * in-memory table reads live commits lazily; counters resume from
-    * the manifest watermarks — O(1), no data scan at attach time.
+    * the tip manifest's watermarks — O(1), no data scan at attach time.
     */
   def attachDurable(metas: Seq[ComponentMeta], dir: String,
       atCommit: Option[Long] = None): String = {
     val hash = ensureTable(metas)
-    val m = atCommit match {
-      case Some(n) => readManifestAt(dir, hash, n).getOrElse(
-        sys.error(s"attachDurable: no manifest version $n at $dir/$hash " +
-          "(never committed, or vacuumed)"))
-      case None => readManifest(dir, hash).getOrElse(
-        sys.error(s"attachDurable: no manifest at $dir/$hash — nothing committed"))
-    }
+    val tip = readManifest(dir, hash).getOrElse(
+      sys.error(s"attachDurable: no manifest at $dir/$hash — nothing committed"))
+    val m = atCommit.fold(tip)(n => readManifestAt(dir, hash, n).getOrElse(
+      sys.error(s"attachDurable: no manifest version $n at $dir/$hash " +
+        "(never committed, or vacuumed)")))
     require(m.buckets == bucketCount,
       s"attachDurable: durable dir has bucket layout ${m.buckets}, this " +
         s"store expects $bucketCount — construct the store with " +
@@ -687,10 +681,9 @@ final class ArchetypeStore(
     val schema = withVersion(Archetype.schemaOf(Archetype.signature(metas)))
     tables(hash) = Log(liveDurable(dir, hash, metas, m)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*), None)
-    nextCommit(hash) = m.maxCommit + 1
-    durableMaxV(hash) = m.maxV
-    commitCounter.updateAndGet(v => math.max(v, m.maxV))
-    entityCounter.updateAndGet(v => math.max(v, m.maxEntity))
+    durableMaxV(watermarkKey(dir, hash)) = m.maxV
+    commitCounter.updateAndGet(v => math.max(v, tip.maxV))
+    entityCounter.updateAndGet(v => math.max(v, tip.maxEntity))
     hash
   }
 
@@ -698,16 +691,6 @@ final class ArchetypeStore(
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
       .foreach(java.nio.file.Files.delete)
-  }
-
-  /** Re-attach a persisted archetype table written by persist(). */
-  def attach(metas: Seq[ComponentMeta], dir: String): String = {
-    val hash = ensureTable(metas)
-    val schema = withVersion(Archetype.schemaOf(Archetype.signature(metas)))
-    val df = spark.read.parquet(s"$dir/$hash")
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    tables(hash) = Log(df, None)
-    hash
   }
 
   // -------------------------------------------------------------------

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The lowest-id bucket cap behind the LSH, SimHash, MinHash and
   * SemDeDup pair generators (C3, C5, C10, `knn_graph`,
   * `pipeline_semdedup`): each key group keeps only its `cap` lowest ids
-  * as the pool that candidates are compared against.
+  * as the pool that candidates are compared against. `knn_graph`'s
+  * NN-descent refine samples each middle node's wedge edges with it too.
   *
   * Contract:
   *   - the rank is `row_number` ordered by id, so it is deterministic,

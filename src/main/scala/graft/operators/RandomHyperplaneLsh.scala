@@ -209,21 +209,17 @@ object RandomHyperplaneLsh {
     // pool members become everyone's neighbor) and Σ in·out = 1.07 G
     // wedge candidates, a 34 GB distinct that filled the disk. With
     // the cap, wedge volume is ≤ Σ min(d, midCap)² ≤ n·midCap² by
-    // construction — skew-proof, like the bucket pools. The rank is
-    // (mid, id)-ordered, so DuckDB replays the identical sample.
-    val wA = Window.partitionBy(col("mid")).orderBy(col("qid"))
-    val wB = Window.partitionBy(col("mid")).orderBy(col("nid"))
+    // construction — skew-proof, like the bucket pools. It is the
+    // [[CappedPool]] rank over (mid, id), so DuckDB replays the
+    // identical sample.
     val fv = floatVecs(corpus, idCol, vecCol)
-    val aSide = und
-      .select(col("nid").as("mid"), col("qid"))
-      .withColumn("mrn", row_number().over(wA))
-      .filter(col("mrn") <= midCap)
+    val aSide = CappedPool.lowest(und.select(col("nid").as("mid"), col("qid")),
+        Seq("mid"), "qid", midCap)
       .join(fv.select(col(idCol).as("qid"), col("vf").as("qv"),
         col("nrm").as("qn")), Seq("qid"))
       .select(col("mid"), col("qid"), col("qv"), col("qn"))
-    val bSide = und.select(col("qid").as("mid"), col("nid"))
-      .withColumn("mrn", row_number().over(wB))
-      .filter(col("mrn") <= midCap)
+    val bSide = CappedPool.lowest(und.select(col("qid").as("mid"), col("nid")),
+        Seq("mid"), "nid", midCap)
       .join(fv.select(col(idCol).as("nid"), col("vf").as("nv"),
         col("nrm").as("nn")), Seq("nid"))
       .select(col("mid"), col("nid"), col("nv"), col("nn"))

@@ -11,11 +11,13 @@ import org.scalacheck.rng.Seed
 import scala.collection.mutable
 
 /** Random mixes of spawnBatch, spawnAt, World.step, World.stepEager,
-  * step-less upsert, despawnWhere and optimize against an in-test
-  * merge-insert model keyed on (entity_id, step) (reference:
-  * store.py:250-256). Whichever read path the store picks — the
-  * append log's per-step frames, or the latest-wins window —
-  * `getHistory` and `World.query` at every step must equal the model.
+  * step-less upsert, despawnWhere, optimize and commitDelta into one of
+  * two durable directories against an in-test merge-insert model keyed
+  * on (entity_id, step) (reference: store.py:250-256). Whichever read
+  * path the store picks — the append log's per-step frames, or the
+  * latest-wins window — `getHistory` and `World.query` at every step
+  * must equal the model, and after each commit a fresh store attached
+  * to that directory must read the model's history.
   */
 class EcsLatestWinsPropertySpec extends SparkSpec {
 
@@ -26,6 +28,7 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
   private final case class Upsert(step: Long, ids: Seq[Long], x: Double) extends Op
   private final case class DespawnWhere(residue: Int) extends Op
   private case object Optimize extends Op
+  private final case class Commit(dir: Int) extends Op
 
   // ids 1..5 overlap the counter's first ids, so spawnAt can hit a
   // spawnBatch key; steps 0..3 reach both held and future steps
@@ -39,7 +42,8 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
     1 -> Gen.const(Step(eager = true)),
     1 -> (for (s <- step; i <- ids; v <- x) yield Upsert(s, i, v)),
     1 -> Gen.choose(0, 2).map(DespawnWhere(_)),
-    1 -> Gen.const(Optimize))
+    1 -> Gen.const(Optimize),
+    2 -> Gen.choose(0, 1).map(Commit(_)))
 
   private object PlusOne extends Processor {
     val components: Seq[ComponentMeta] = Seq(PosMeta)
@@ -59,8 +63,15 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
     val world = World.make(spark, "sim_prop", run, optimizeInterval = 2)
     world.store.ensureTable(pos)
     world.addProcessor(PlusOne)
+    val dirs = Seq.fill(2)(java.nio.file.Files.createTempDirectory("graft_prop").toString)
     // (entity_id, step) -> (x, is_active); a later write replaces
     val model = mutable.Map.empty[(Long, Long), (Double, Boolean)]
+    def rows(history: DataFrame) = history
+      .select(col("entity_id"), col("step"), col("position__x"), col("is_active"))
+      .as[(Long, Long, Double, Boolean)].collect().toSeq.sorted
+    def modelRows = model.toSeq
+      .map { case ((i, s), (v, live)) => (i, s, v, live) }.sorted
+    var durable = Prop.passed
     ops.foreach {
       case SpawnBatch(is, v) =>
         world.spawnBatch(pos, is.map(i => (i, v + i, 0.0))
@@ -87,13 +98,16 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
         }
       case Optimize =>
         world.store.optimize()
+      case Commit(d) =>
+        world.store.commitDelta(dirs(d))
+        val attached = new ArchetypeStore(spark, "sim_prop", run)
+        attached.attachDurable(pos, dirs(d))
+        val (got, want) = (rows(attached.getHistory(pos)(hash)), modelRows)
+        durable = durable && ((got == want) :| s"dir $d re-attached $got != model $want")
     }
     val history = world.getHistory(pos)(hash)
-    val gotHistory = history
-      .select(col("entity_id"), col("step"), col("position__x"), col("is_active"))
-      .as[(Long, Long, Double, Boolean)].collect().toSeq.sorted
-    val wantHistory = model.toSeq
-      .map { case ((i, s), (v, live)) => (i, s, v, live) }.sorted
+    val gotHistory = rows(history)
+    val wantHistory = modelRows
     val gotLive = (0L to world.currentStep).map(s => s -> world.query(pos, Some(s))(hash)
       .select(col("entity_id"), col("position__x")).as[(Long, Double)]
       .collect().toSeq.sorted)
@@ -104,7 +118,7 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.nonEmpty
     val prop = ((gotHistory == wantHistory) :| s"history $gotHistory != model $wantHistory") &&
-      ((gotLive == wantLive) :| s"query by step $gotLive != model $wantLive")
+      ((gotLive == wantLive) :| s"query by step $gotLive != model $wantLive") && durable
     (prop :| s"ops $ops", windowed)
   }
 

@@ -83,42 +83,98 @@ class EcsSpec extends SparkSpec {
     assert(live(0).getAs[Double]("position__x") == 9.0)
   }
 
-  test("persist + attach round-trips archetype state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ecs").toString
-    val world = World.make(spark, "sim_test", "run_persist")
-    world.addProcessor(MovementProcessor)
-    world.spawn(Position(1.0, 1.0), Velocity(1.0, 0.0))
-    (1 to 2).foreach(_ => world.step(0.5))
-    world.store.persist(dir)
-
-    val store2 = new ArchetypeStore(spark, "sim_test", "run_persist")
-    val hash = store2.attach(PosVel, dir)
-    val df = store2.resolved(hash)
-    assert(df.count() == 3L, "steps 0..2 round-trip")
-    val last = df.filter(col("step") === 2).head()
-    assert(last.getAs[Double]("position__x") == 2.0)
-  }
-
   test("history scoping: per-run by default, all runs of a simulation on request") {
     val simName = s"sim_multi_${java.util.UUID.randomUUID().toString.take(8)}"
-    val w1 = World.make(spark, simName, "run_a")
-    val w2 = World.make(spark, simName, "run_b")
-    w1.spawn(Position(1.0, 0.0))
-    w2.spawn(Position(2.0, 0.0))
-    // runs live in separate stores here; attach run_a's table into w2's
-    // store scope via persist+attach to model a shared simulation store
+    // both runs commit into one shared durable directory
     val dir = java.nio.file.Files.createTempDirectory("graft_runs").toString
-    w1.store.persist(dir)
-    w2.store.persist(dir + "_b")
-    val shared = new ArchetypeStore(spark, simName, "run_a")
-    val hash = shared.attach(Seq(PosMeta), dir)
-    assert(shared.getHistory(Seq(PosMeta))(hash).count() == 1L)
-    // same store, other run scope sees nothing for run_b...
-    val asRunB = new ArchetypeStore(spark, simName, "run_b")
-    asRunB.attach(Seq(PosMeta), dir)
-    assert(asRunB.getHistory(Seq(PosMeta))(hash).count() == 0L)
+    Seq("run_a" -> 1.0, "run_b" -> 2.0).foreach { case (run, x) =>
+      val w = World.make(spark, simName, run)
+      w.spawn(Position(x, 0.0))
+      w.store.commitDelta(dir)
+    }
+    val hash = Archetype.hashOf(Seq(PosMeta))
+    def attached(run: String) = {
+      val s = new ArchetypeStore(spark, simName, run)
+      s.attachDurable(Seq(PosMeta), dir)
+      s
+    }
+    def xs(s: ArchetypeStore, includeAllRuns: Boolean = false) =
+      s.getHistory(Seq(PosMeta), includeAllRuns)(hash).select("position__x")
+        .collect().map(_.getDouble(0)).sorted.toSeq
+    // each run sees only its own rows...
+    assert(xs(attached("run_a")) == Seq(1.0))
+    assert(xs(attached("run_b")) == Seq(2.0))
+    val asRunC = attached("run_c")
+    assert(xs(asRunC).isEmpty)
     // ...unless includeAllRuns widens to the simulation
-    assert(asRunB.getHistory(Seq(PosMeta), includeAllRuns = true)(hash).count() == 1L)
+    assert(xs(asRunC, includeAllRuns = true) == Seq(1.0, 2.0))
+  }
+
+  test("durable watermarks only rise: a run sharing a directory never reuses a version") {
+    val simName = s"sim_wm_${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = java.nio.file.Files.createTempDirectory("graft_wm").toString
+    val pos = Seq(PosMeta)
+    val hash = Archetype.hashOf(pos)
+    def state(x: Double) = spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](
+        org.apache.spark.sql.Row(simName, "run_a", 1L, 0L, true, x, 0.0)),
+      Archetype.schemaOf(pos))
+    def committedRows(s: ArchetypeStore) = spark.read.parquet(s"$dir/$hash")
+      .filter(col("commit") === s.readManifest(dir, hash).get.maxCommit).count()
+    val a = World.make(spark, simName, "run_a").store
+    a.ensureTable(pos)
+    (1 to 20).foreach(i => a.upsert(hash, state(i.toDouble)))
+    a.commitDelta(dir)
+    assert(a.readManifest(dir, hash).get.maxV == 20L)
+
+    // a fresh run_b store, whose counter is at 1, commits one spawn
+    val b = World.make(spark, simName, "run_b")
+    b.spawn(Position(5.0, 0.0))
+    b.store.commitDelta(dir)
+    assert(b.store.readManifest(dir, hash).get.maxV == 20L,
+      "a writer with a lower counter must not pull maxV down")
+
+    // a re-attached run_a store writes nothing it did not write itself
+    val again = new ArchetypeStore(spark, simName, "run_a")
+    again.attachDurable(pos, dir)
+    again.commitDelta(dir)
+    assert(committedRows(again) == 0L, "a commit with no new rows rewrote old ones")
+
+    // and its upsert outranks every committed version of the key
+    again.upsert(hash, state(99.0))
+    assert(again.resolved(hash).select("position__x").head().getDouble(0) == 99.0)
+    again.commitDelta(dir)
+    val fresh = new ArchetypeStore(spark, simName, "run_a")
+    fresh.attachDurable(pos, dir)
+    assert(fresh.resolved(hash).select("position__x").head().getDouble(0) == 99.0)
+  }
+
+  test("a store committing to two directories leaves each equal to its history") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_two_dirs")
+    val (dirA, dirB) = (s"$tmp/a", s"$tmp/b")
+    val world = World.make(spark, "sim_test", "run_two_dirs")
+    world.addProcessor(MovementProcessor)
+    world.spawn(Position(1.0, 1.0), Velocity(1.0, 0.0))
+    world.step(0.5)
+    world.store.commitDelta(dirA) // steps 0..1
+    world.step(0.5)
+    world.store.commitDelta(dirB) // a fresh directory: steps 0..2
+    world.store.commitDelta(dirA) // the delta: step 2
+    val hash = Archetype.hashOf(PosVel)
+    assert(world.store.readManifest(dirB, hash).get.maxCommit == 0L,
+      "a fresh directory numbers its commits from 0")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("entity_id", "step", "position__x").collect().map(_.toString).sorted.toSeq
+    val want = rows(world.store.resolved(hash))
+    assert(want.size == 3)
+    Seq(dirA, dirB).foreach { d =>
+      val s = new ArchetypeStore(spark, "sim_test", "run_two_dirs")
+      s.attachDurable(PosVel, d)
+      assert(rows(s.resolved(hash)) == want, s"$d re-attached")
+    }
+    // the watermark is the directory, however its path is spelled
+    world.store.commitDelta(s"$tmp/b/../a/.")
+    assert(spark.read.parquet(s"$dirA/$hash").filter(col("commit") === 2).count() == 0L)
   }
 
   test("durable incremental commits: append-only deltas, re-attach, compaction") {
@@ -245,15 +301,23 @@ class EcsSpec extends SparkSpec {
     assert(e.getMessage.contains("version 9"))
 
     // a write from a time-traveled store must NOT clobber the newer
-    // commit: it lands on top of the current tip
-    val w0 = new World2Harness(s0); w0.stepOnce()
+    // commit: it lands on top of the current tip, and its step-1 row
+    // (x = 1 + 1·2.0) outranks the tip's (x = 1 + 1·0.5)
+    val tipV = world.store.readManifest(dir, hash).get.maxV
+    val w0 = new World2Harness(s0); w0.stepOnce(dt = 2.0)
     s0.commitDelta(dir)
     val m = s0.readManifest(dir, hash).get
     assert(m.maxCommit == 2L, "branch write appended past the tip")
+    val branchV = spark.read.parquet(s"$dir/$hash").filter(col("commit") === 2)
+      .agg(min(col(ArchetypeStore.VersionCol))).head().getLong(0)
+    assert(branchV > tipV, s"branch write's _v $branchV must exceed the tip's $tipV")
     val sAfter = new ArchetypeStore(spark, "sim_test", "run_tt")
     sAfter.attachDurable(PosVel, dir)
     // steps 0..2 from the original line still present (not destroyed)
-    assert(sAfter.resolved(hash).count() == 3L)
+    val after = sAfter.resolved(hash)
+    assert(after.count() == 3L)
+    assert(after.filter(col("step") === 1).head().getAs[Double]("position__x") == 3.0,
+      "the branch write's step-1 value wins")
   }
 
   test("durable writers take turns: held lock blocks, stale lock reclaims") {
@@ -321,10 +385,10 @@ class EcsSpec extends SparkSpec {
     private val updater = new UpdateManager(store)
     private val system = new SimpleSystem(querier)
     system.addProcessor(MovementProcessor)
-    def stepOnce(): Unit = {
+    def stepOnce(dt: Double = 0.5): Unit = {
       val lastStep = store.resolved(Archetype.hashOf(PosVel))
         .agg(max(col("step"))).head().getLong(0)
-      val updates = system.execute(lastStep, 0.5)
+      val updates = system.execute(lastStep, dt)
       updater.collect(updates, lastStep + 1)
     }
   }
@@ -717,14 +781,9 @@ class EcsSpec extends SparkSpec {
       .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(9.0, 1.0))
 
     val dir = java.nio.file.Files.createTempDirectory("graft_fb").toString
-    val src = seeded("attach")
-    src.store.persist(s"$dir/persist")
-    src.store.commitDelta(s"$dir/durable")
-    val attached = new ArchetypeStore(spark, "sim_test", "run_fb_attach")
-    attached.attach(pos, s"$dir/persist")
-    assertWindows("attach", attached, pos, 0L, expected = true)
+    seeded("attach").store.commitDelta(dir)
     val durable = new ArchetypeStore(spark, "sim_test", "run_fb_attach")
-    durable.attachDurable(pos, s"$dir/durable")
+    durable.attachDurable(pos, dir)
     assertWindows("attachDurable", durable, pos, 0L, expected = true)
   }
 
