@@ -1,8 +1,11 @@
 package graft.ecs
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
@@ -32,7 +35,12 @@ import scala.jdk.CollectionConverters._
   *    cheap on a 1000-executor cluster: writes never rewrite history,
   *    and `optimize()` cuts the log's lineage — the analogue of the
   *    reference's `table.optimize()` — and re-points every frame at
-  *    the new snapshot.
+  *    the new snapshot, which it stores serialized.
+  *  - An append is one projection added to the log's list of parts; it
+  *    never builds the log's DataFrame. The union of all parts is
+  *    planned once per read of the whole log (history, resolve,
+  *    compaction, durable commit), not once per append, so the driver's
+  *    analysis cost of a step does not grow with the log.
   *  - Persistence is one append-only commit log per archetype,
   *    published through a manifest: `commitDelta` writes the rows not
   *    yet in a directory, `compactDurable` + `vacuumDurable` fold the
@@ -79,9 +87,8 @@ final class ArchetypeStore(
     val hash = Archetype.hashOf(metas)
     if (!sigByHash.contains(hash)) {
       sigByHash(hash) = Archetype.signature(metas)
-      val schema = withVersion(Archetype.schemaOf(metas))
-      tables(hash) = Log(spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), schema), Some(Map.empty))
+      tables(hash) = Log(withVersion(Archetype.schemaOf(metas)), Vector.empty,
+        Some(Map.empty), 0L)
     }
     hash
   }
@@ -163,11 +170,12 @@ final class ArchetypeStore(
     // state doesn't (and resolution over a cond-filtered subset could
     // crown a stale version whose newer non-matching sibling was
     // filtered out).
+    val v = commitCounter.incrementAndGet()
     val tombstones = resolveKeepVersion(tables(hash), runScope)
       .filter(col("is_active") && cond)
       .withColumn("is_active", lit(false))
-      .withColumn(VersionCol, lit(commitCounter.incrementAndGet()))
-    put(hash, tombstones, None)
+      .withColumn(VersionCol, lit(v))
+    put(hash, tombstones, None, v)
   }
 
   /** Archetype MIGRATION — add/remove components on live entities
@@ -285,7 +293,7 @@ final class ArchetypeStore(
         case Some(frames) =>
           steps.distinct.flatMap(frames.get).reduceOption(_ unionByName _)
             .getOrElse(spark.createDataFrame(
-              java.util.Collections.emptyList[Row](), log.df.schema))
+              java.util.Collections.emptyList[Row](), log.schema))
             .filter(runScope && cond).drop(VersionCol)
         case None =>
           resolveKeepVersion(log, runScope).drop(VersionCol)
@@ -327,15 +335,20 @@ final class ArchetypeStore(
     * keep skipping the latest-wins window.
     */
   def upsertAt(hash: String, df: DataFrame, step: Long): Unit =
-    appendVersioned(hash, df.withColumn("step", lit(step)), Some(step))
+    appendVersioned(hash, df, Some(step))
 
+  /** Stamps `step` (when given) and a fresh `_v`, and orders the columns
+    * as the archetype's schema, in one projection: every analysed
+    * Dataset costs the driver a pass of the analyzer.
+    */
   private def appendVersioned(hash: String, df: DataFrame, step: Option[Long]): Unit = {
     flush()
-    val schema = Archetype.schemaOf(sigByHash(hash))
-    val prepared = df
-      .withColumn(VersionCol, lit(commitCounter.incrementAndGet()))
-      .select(schema.fieldNames.map(col).toIndexedSeq :+ col(VersionCol): _*)
-    put(hash, prepared, step.map(s => Map(s -> prepared)))
+    val v = commitCounter.incrementAndGet()
+    val prepared = df.select(Archetype.schemaOf(sigByHash(hash)).fieldNames.toIndexedSeq.map {
+      case "step" => step.fold(col("step"))(s => lit(s).as("step"))
+      case c => col(c)
+    } :+ lit(v).as(VersionCol): _*)
+    put(hash, prepared, step.map(s => Map(s -> prepared)), v)
   }
 
   /** Plain append (reference: store.py:258-261 `update`). */
@@ -346,19 +359,21 @@ final class ArchetypeStore(
     * of LanceDB `table.optimize()`). Call every few steps in a long loop.
     * The archetypes materialize as concurrent jobs, each under the
     * caller's SparkContext local properties
-    * ([[graft.QueryShape.concurrently]]). Every frame of a window-free
-    * log is then re-pointed at its step of the new snapshot, and only
-    * after that are the previous compaction's checkpoint blocks
-    * released — a frame left on the old snapshot would read freed
-    * blocks. Long simulations so hold at most one snapshot per
-    * archetype.
+    * ([[graft.QueryShape.concurrently]]). The snapshot becomes the log's
+    * one part, and every frame of a window-free log is re-pointed at
+    * its step of it; only after that are the previous compaction's
+    * checkpoint blocks released — a frame left on the old snapshot
+    * would read freed blocks. Long simulations so hold at most one
+    * snapshot per archetype.
     *
-    * With `reliableCheckpoints` the snapshot goes to the session's
-    * checkpoint directory (HDFS/object store on a cluster) instead of
-    * executor-local blocks — a lost executor then costs a re-read, not
-    * the whole simulation. Local checkpoints stay the default for
-    * single-node speed; old reliable checkpoint files are reclaimed by
-    * Spark's reference-tracking cleaner.
+    * A local snapshot is stored serialized ([[localSnapshot]]): every
+    * later read deserializes it, but caching it costs no object-graph
+    * walk to size the rows. With `reliableCheckpoints` the snapshot
+    * goes to the session's checkpoint directory (HDFS/object store on a
+    * cluster) instead of executor-local blocks — a lost executor then
+    * costs a re-read, not the whole simulation. Local checkpoints stay
+    * the default for single-node speed; old reliable checkpoint files
+    * are reclaimed by Spark's reference-tracking cleaner.
     */
   def optimize(): Unit = {
     flush()
@@ -368,14 +383,14 @@ final class ArchetypeStore(
     val logs = tables.toSeq
     val snapshots = graft.QueryShape.concurrently(spark, logs) { case (_, log) =>
       if (reliableCheckpoints) log.df.checkpoint(eager = true)
-      else log.df.localCheckpoint(true)
+      else localSnapshot(log.df)
     }
     logs.zip(snapshots).foreach { case ((h, log), snapshot) =>
-      tables(h) = Log(snapshot, log.frames.map(_.map { case (s, _) =>
-        s -> snapshot.filter(col("step") === s)
+      tables(h) = log.copy(parts = Vector(snapshot), frames = log.frames.map(_.map {
+        case (s, _) => s -> snapshot.filter(col("step") === s)
       }))
       checkpointed.put(h, snapshot).foreach(old =>
-        org.apache.spark.sql.GraftBridge.checkpointRdd(old).foreach(_.unpersist(false)))
+        GraftBridge.checkpointRdd(old).foreach(_.unpersist(false)))
     }
   }
 
@@ -562,7 +577,11 @@ final class ArchetypeStore(
   }
 
   /** Durably append rows not yet committed; O(delta), no rewrite.
-    * Publication is atomic: data renamed into place, manifest last.
+    * Publication is atomic: data renamed into place, manifest last. An
+    * archetype whose log holds no `_v` above the directory's watermark
+    * is skipped (no job, no commit directory, no manifest) once the
+    * directory has its manifest; its first commit is published even
+    * when empty, so `attachDurable` finds it.
     */
   def commitDelta(dir: String): Unit = withDirLock(dir) {
     flush()
@@ -572,19 +591,20 @@ final class ArchetypeStore(
         s"commitDelta: durable dir has bucket layout ${m.buckets}, " +
           s"this store writes $bucketCount — bucket counts must match"))
       val key = watermarkKey(dir, hash)
-      val highV = commitCounter.get()
-      // always on top of the current tip: a store attached at an old
-      // version (time travel) must not reclaim a live newer commit
-      val n = prev.map(_.maxCommit + 1).getOrElse(0L)
-      stageCommit(dir, hash, n,
-        log.df.filter(col(VersionCol) > durableMaxV.getOrElse(key, -1L)))
-      writeManifest(dir, hash, Manifest(
-        base = prev.map(_.base).getOrElse(0L),
-        maxCommit = n,
-        maxV = math.max(highV, prev.map(_.maxV).getOrElse(0L)),
-        maxEntity = math.max(entityCounter.get(), prev.map(_.maxEntity).getOrElse(0L)),
-        buckets = bucketCount))
-      durableMaxV(key) = highV
+      val written = durableMaxV.getOrElse(key, 0L)
+      if (prev.isEmpty || log.maxV > written) {
+        // always on top of the current tip: a store attached at an old
+        // version (time travel) must not reclaim a live newer commit
+        val n = prev.map(_.maxCommit + 1).getOrElse(0L)
+        stageCommit(dir, hash, n, log.df.filter(col(VersionCol) > written))
+        writeManifest(dir, hash, Manifest(
+          base = prev.map(_.base).getOrElse(0L),
+          maxCommit = n,
+          maxV = math.max(commitCounter.get(), prev.map(_.maxV).getOrElse(0L)),
+          maxEntity = math.max(entityCounter.get(), prev.map(_.maxEntity).getOrElse(0L)),
+          buckets = bucketCount))
+        durableMaxV(key) = math.max(written, log.maxV)
+      }
     }
   }
 
@@ -679,8 +699,8 @@ final class ArchetypeStore(
         s"store expects $bucketCount — construct the store with " +
         s"entityBuckets matching the manifest")
     val schema = withVersion(Archetype.schemaOf(Archetype.signature(metas)))
-    tables(hash) = Log(liveDurable(dir, hash, metas, m)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*), None)
+    tables(hash) = Log(schema, Vector(liveDurable(dir, hash, metas, m)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)), None, m.maxV)
     durableMaxV(watermarkKey(dir, hash)) = m.maxV
     commitCounter.updateAndGet(v => math.max(v, tip.maxV))
     entityCounter.updateAndGet(v => math.max(v, tip.maxEntity))
@@ -697,17 +717,57 @@ final class ArchetypeStore(
 
   private def runScope = col("simulation") === simulation && col("run") === run
 
-  /** Append version-stamped rows to an archetype's log. `frames` maps
-    * every step the rows carry to its rows, or is None when the caller
-    * cannot say; the log keeps its window-free reads only while no
-    * append lands at a step it already holds.
+  /** One archetype's append log: its appends as `parts`, in append
+    * order, each with the columns of `schema` in its order. `df`, their
+    * n-ary union, is built and analysed on the first read of this log
+    * value and then cached, so an append costs the driver no analysis
+    * of the log. The union is positional (`put` checks the columns):
+    * the analyzer resolves a by-name union into a chain of binary
+    * unions, one per part. `maxV` is the highest `_v` the log holds,
+    * which `commitDelta` compares with a directory's watermark.
+    *
+    * While no (entity_id, step) key can repeat in it, `frames` maps
+    * each step it holds to that step's rows: the append that wrote
+    * them, or the last snapshot filtered to the step. Its key set is
+    * the steps the log covers. `frames` is None once an append may have
+    * rewritten a key — for good: the log then resolves through the
+    * latest-wins window. One value carries all of it, so a reader on
+    * another thread (the streaming ingest appends from its own) never
+    * pairs a log with stale frames.
+    */
+  private case class Log(schema: StructType, parts: Vector[DataFrame],
+      frames: Option[Map[Long, DataFrame]], maxV: Long) {
+    lazy val df: DataFrame = parts match {
+      case Vector() => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      case Vector(one) => one
+      case _ => GraftBridge.ofRows(spark, Union(parts.map(GraftBridge.analyzedPlan)))
+    }
+  }
+
+  /** The log's rows under `scope`, latest `_v` per merge key: the scoped
+    * log itself while no key can repeat, else the window.
+    */
+  private def resolveKeepVersion(log: Log, scope: org.apache.spark.sql.Column): DataFrame = {
+    val scoped = log.df.filter(scope)
+    if (log.frames.isDefined) scoped else latestWinsKeepVersion(scoped)
+  }
+
+  /** Add version-stamped rows, whose highest `_v` is `v`, to an
+    * archetype's log as one more part; the log's union is not built
+    * here. `frames` maps every step the rows carry to its rows, or is
+    * None when the caller cannot say; the log keeps its window-free
+    * reads only while no append lands at a step it already holds.
     */
   private def put(hash: String, preparedWithVersion: DataFrame,
-      frames: Option[Map[Long, DataFrame]]): Unit = {
+      frames: Option[Map[Long, DataFrame]], v: Long): Unit = {
     val log = tables(hash)
+    require(preparedWithVersion.columns.sameElements(log.schema.fieldNames),
+      s"an append's columns ${preparedWithVersion.columns.mkString(", ")} are not " +
+        s"the archetype's ${log.schema.fieldNames.mkString(", ")}")
     val held = for (h <- log.frames; f <- frames if !f.keys.exists(h.contains))
       yield h ++ f
-    tables(hash) = Log(log.df.unionByName(preparedWithVersion), held)
+    tables(hash) = log.copy(parts = log.parts :+ preparedWithVersion, frames = held,
+      maxV = math.max(log.maxV, v))
   }
 
   /** Materialize buffered single-row spawns into their tables. Their
@@ -718,9 +778,10 @@ final class ArchetypeStore(
       if (rows.nonEmpty) {
         val schema = withVersion(Archetype.schemaOf(sigByHash(hash)))
         val df = spark.createDataFrame(rows.toSeq.asJava, schema)
-        // index 3 is `step` in addEntityValues' row layout
+        // index 3 is `step` and the last is `_v` in addEntityValues' row layout
         put(hash, df, Some(rows.map(_.getLong(3)).distinct
-          .map(s => s -> df.filter(col("step") === s)).toMap))
+          .map(s => s -> df.filter(col("step") === s)).toMap),
+          rows.iterator.map(r => r.getLong(r.length - 1)).max)
         rows.clear()
       }
     }
@@ -731,24 +792,13 @@ object ArchetypeStore {
   val VersionCol = "_v"
   val MergeKeys: Seq[String] = Seq("simulation", "run", "entity_id", "step")
 
-  /** One archetype's append log. While no (entity_id, step) key can
-    * repeat in it, `frames` maps each step it holds to that step's
-    * rows: the append that wrote them, or the last snapshot filtered to
-    * the step. Its key set is the steps the log covers. `frames` is
-    * None once an append may have rewritten a key — for good: the log
-    * then resolves through the latest-wins window. One map entry
-    * carries both, so a reader on another thread (the streaming ingest
-    * appends from its own) never pairs a log with stale frames.
+  /** An eager local checkpoint of `df`, stored serialized: the block
+    * store then sizes each block by its bytes instead of walking the
+    * rows' object graphs. Compaction snapshots and `World.stepEager`'s
+    * per-step frames use it.
     */
-  private final case class Log(df: DataFrame, frames: Option[Map[Long, DataFrame]])
-
-  /** The log's rows under `scope`, latest `_v` per merge key: the scoped
-    * log itself while no key can repeat, else the window.
-    */
-  private def resolveKeepVersion(log: Log, scope: org.apache.spark.sql.Column): DataFrame = {
-    val scoped = log.df.filter(scope)
-    if (log.frames.isDefined) scoped else latestWinsKeepVersion(scoped)
-  }
+  private[ecs] def localSnapshot(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
   private def withVersion(s: org.apache.spark.sql.types.StructType) =
     org.apache.spark.sql.types.StructType(

@@ -19,8 +19,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQ
   * as-of-latest read (each entity's row at its highest step), not a
   * query at a single step. This is the same merge-on-read contract the
   * store already applies within a step (latest `_v` wins per
-  * (entity, step)) lifted to the step axis; `optimize()` compaction
-  * bounds the read amplification of the history scan.
+  * (entity, step)) lifted to the step axis.
+  *
+  * The bridge never compacts: it advances `world.currentStep` itself
+  * and never runs `World.step`, so the world's `optimizeInterval` does
+  * not apply, and the log keeps one part per micro-batch. A caller
+  * that reads history from a long stream calls `world.store.optimize()`
+  * every so many batches, which folds the parts into one snapshot and
+  * bounds the history scan's plan and read amplification.
   *
   * Entities spawned from the stream use `entity_id = user_id` — the
   * external key IS the entity identity, the scalable idiom for bulk

@@ -119,8 +119,6 @@ class EcsSpec extends SparkSpec {
       java.util.List.of[org.apache.spark.sql.Row](
         org.apache.spark.sql.Row(simName, "run_a", 1L, 0L, true, x, 0.0)),
       Archetype.schemaOf(pos))
-    def committedRows(s: ArchetypeStore) = spark.read.parquet(s"$dir/$hash")
-      .filter(col("commit") === s.readManifest(dir, hash).get.maxCommit).count()
     val a = World.make(spark, simName, "run_a").store
     a.ensureTable(pos)
     (1 to 20).foreach(i => a.upsert(hash, state(i.toDouble)))
@@ -134,11 +132,15 @@ class EcsSpec extends SparkSpec {
     assert(b.store.readManifest(dir, hash).get.maxV == 20L,
       "a writer with a lower counter must not pull maxV down")
 
-    // a re-attached run_a store writes nothing it did not write itself
+    // a re-attached run_a store has no new rows: its commit publishes nothing
     val again = new ArchetypeStore(spark, simName, "run_a")
     again.attachDurable(pos, dir)
+    val tip = again.readManifest(dir, hash).get.maxCommit
     again.commitDelta(dir)
-    assert(committedRows(again) == 0L, "a commit with no new rows rewrote old ones")
+    assert(again.readManifest(dir, hash).get.maxCommit == tip,
+      "a commit with no new rows published a manifest")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/$hash/commit=${tip + 1}")),
+      "a commit with no new rows wrote a commit directory")
 
     // and its upsert outranks every committed version of the key
     again.upsert(hash, state(99.0))
@@ -175,6 +177,30 @@ class EcsSpec extends SparkSpec {
     // the watermark is the directory, however its path is spelled
     world.store.commitDelta(s"$tmp/b/../a/.")
     assert(spark.read.parquet(s"$dirA/$hash").filter(col("commit") === 2).count() == 0L)
+  }
+
+  test("commitDelta publishes only the archetypes with rows above the directory's watermark") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_skip").toString
+    val world = World.make(spark, "sim_test", "run_skip", optimizeInterval = 0)
+    world.addProcessor(MovementProcessor) // moves (Pos, Vel) only
+    world.spawn(Position(1.0, 1.0), Velocity(1.0, 0.0))
+    world.spawn(Position(5.0, 5.0))
+    world.store.commitDelta(dir) // the first commit of both archetypes
+    world.step(0.5)
+    world.store.commitDelta(dir)
+    val (moved, still) = (Archetype.hashOf(PosVel), Archetype.hashOf(Seq(PosMeta)))
+    def commitDirs(h: String) = new java.io.File(s"$dir/$h").listFiles()
+      .map(_.getName).filter(_.startsWith("commit=")).sorted.toSeq
+    assert(commitDirs(moved) == Seq("commit=0", "commit=1"))
+    assert(commitDirs(still) == Seq("commit=0"), "an archetype with no new rows was committed")
+    assert(world.store.readManifest(dir, still).get.maxCommit == 0L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("entity_id", "step", "position__x").collect().map(_.toString).sorted.toSeq
+    Seq(PosVel -> moved, Seq(PosMeta) -> still).foreach { case (metas, h) =>
+      val s = new ArchetypeStore(spark, "sim_test", "run_skip")
+      s.attachDurable(metas, dir)
+      assert(rows(s.resolved(h)) == rows(world.store.resolved(h)), s"$h re-attached")
+    }
   }
 
   test("durable incremental commits: append-only deltas, re-attach, compaction") {
@@ -811,6 +837,41 @@ class EcsSpec extends SparkSpec {
     }
     assert(w.query(PosVel).values.head.orderBy("entity_id")
       .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(5.0, 5.0))
+  }
+
+  test("an append adds one part to the log: the history read plans one union of every append") {
+    val w = World.make(spark, "sim_test", "run_one_union", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
+      .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+    val k = 5
+    (1 to k).foreach(_ => w.step(0.5))
+    val history = w.getHistory(PosVel).values.head
+    val unions = org.apache.spark.sql.GraftBridge.analyzedPlan(history).collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u.children.size
+    }
+    assert(unions == Seq(k + 1), s"unions and their children: $unions")
+    assert(history.count() == 2L * (k + 1))
+  }
+
+  test("compaction snapshots and stepEager frames are stored serialized") {
+    import org.apache.spark.sql.GraftBridge
+    /** Storage levels of the checkpointed RDDs a read scans. */
+    def levels(df: org.apache.spark.sql.DataFrame) =
+      GraftBridge.analyzedPlan(df).collectLeaves()
+        .flatMap(leaf => GraftBridge.checkpointRdd(GraftBridge.ofRows(spark, leaf)))
+        .map(_.getStorageLevel).distinct
+    val ser = Seq(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val w = World.make(spark, "sim_test", "run_ser", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
+      .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+    w.stepEager(0.5)
+    assert(levels(w.query(PosVel).values.head) == ser, "stepEager's frame")
+    w.store.optimize()
+    assert(levels(w.getHistory(PosVel).values.head) == ser, "optimize()'s snapshot")
+    assert(w.query(PosVel).values.head.orderBy("entity_id")
+      .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(1.5, 1.5))
   }
 
   test("stepEager and optimize run their jobs under the caller's local properties") {
