@@ -338,15 +338,20 @@ final class ArchetypeStore(
     appendVersioned(hash, df, Some(step))
 
   /** Stamps `step` (when given) and a fresh `_v`, and orders the columns
-    * as the archetype's schema, in one projection: every analysed
-    * Dataset costs the driver a pass of the analyzer.
+    * as the archetype's schema and casts any column of another type
+    * (nullability aside, as a union compares them) to it, in one
+    * projection: every analysed Dataset costs the driver a pass of the
+    * analyzer. A column that cannot be cast fails here, at the append,
+    * not at the log's next whole read.
     */
   private def appendVersioned(hash: String, df: DataFrame, step: Option[Long]): Unit = {
     flush()
     val v = commitCounter.incrementAndGet()
-    val prepared = df.select(Archetype.schemaOf(sigByHash(hash)).fieldNames.toIndexedSeq.map {
-      case "step" => step.fold(col("step"))(s => lit(s).as("step"))
-      case c => col(c)
+    val given = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    val prepared = df.select(Archetype.schemaOf(sigByHash(hash)).fields.toIndexedSeq.map {
+      case f if f.name == "step" && step.isDefined => lit(step.get).as("step")
+      case f if given.get(f.name).contains(f.dataType.catalogString) => col(f.name)
+      case f => col(f.name).cast(f.dataType).as(f.name)
     } :+ lit(v).as(VersionCol): _*)
     put(hash, prepared, step.map(s => Map(s -> prepared)), v)
   }
@@ -366,14 +371,15 @@ final class ArchetypeStore(
     * would read freed blocks. Long simulations so hold at most one
     * snapshot per archetype.
     *
-    * A local snapshot is stored serialized ([[localSnapshot]]): every
-    * later read deserializes it, but caching it costs no object-graph
-    * walk to size the rows. With `reliableCheckpoints` the snapshot
-    * goes to the session's checkpoint directory (HDFS/object store on a
-    * cluster) instead of executor-local blocks — a lost executor then
-    * costs a re-read, not the whole simulation. Local checkpoints stay
-    * the default for single-node speed; old reliable checkpoint files
-    * are reclaimed by Spark's reference-tracking cleaner.
+    * A local snapshot is stored serialized (`MEMORY_AND_DISK_SER`):
+    * every later read deserializes it, but the block store sizes it by
+    * its bytes instead of walking each row's object graph. With
+    * `reliableCheckpoints` the snapshot goes to the session's
+    * checkpoint directory (HDFS/object store on a cluster) instead of
+    * executor-local blocks — a lost executor then costs a re-read, not
+    * the whole simulation. Local checkpoints stay the default for
+    * single-node speed; old reliable checkpoint files are reclaimed by
+    * Spark's reference-tracking cleaner.
     */
   def optimize(): Unit = {
     flush()
@@ -383,7 +389,7 @@ final class ArchetypeStore(
     val logs = tables.toSeq
     val snapshots = graft.QueryShape.concurrently(spark, logs) { case (_, log) =>
       if (reliableCheckpoints) log.df.checkpoint(eager = true)
-      else localSnapshot(log.df)
+      else log.df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
     }
     logs.zip(snapshots).foreach { case ((h, log), snapshot) =>
       tables(h) = log.copy(parts = Vector(snapshot), frames = log.frames.map(_.map {
@@ -424,9 +430,11 @@ final class ArchetypeStore(
   // so a crash at any point leaves either a hidden staging dir or an
   // unreferenced `commit=<n>` dir — both invisible. A retried commit
   // deletes the orphan target before renaming. `attachDurable`
-  // recovers all watermarks from the manifest in O(1) — no table scan
-  // — and resumes its counters above the tip's, also when it attaches
-  // an older version, so its writes outrank every committed row.
+  // recovers all watermarks from manifests — no table scan — and
+  // resumes its counters above every archetype's tip in the directory
+  // (a commit skips an archetype with nothing new, so one manifest can
+  // lag the others), also when it attaches an older version, so its
+  // writes outrank every committed row and its new ids are fresh.
   // Commits below `base` (superseded by compaction) and orphans are
   // dead and can be vacuumed out-of-band.
   // -------------------------------------------------------------------
@@ -684,7 +692,8 @@ final class ArchetypeStore(
 
   /** Attach a durable store written by commitDelta/compactDurable: the
     * in-memory table reads live commits lazily; counters resume from
-    * the tip manifest's watermarks — O(1), no data scan at attach time.
+    * the highest watermarks of every archetype's tip manifest in `dir`
+    * — one small read per archetype, no data scan at attach time.
     */
   def attachDurable(metas: Seq[ComponentMeta], dir: String,
       atCommit: Option[Long] = None): String = {
@@ -702,10 +711,17 @@ final class ArchetypeStore(
     tables(hash) = Log(schema, Vector(liveDurable(dir, hash, metas, m)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)), None, m.maxV)
     durableMaxV(watermarkKey(dir, hash)) = m.maxV
-    commitCounter.updateAndGet(v => math.max(v, tip.maxV))
-    entityCounter.updateAndGet(v => math.max(v, tip.maxEntity))
+    val tips = tipManifests(dir)
+    commitCounter.updateAndGet(v => math.max(v, tips.map(_.maxV).max))
+    entityCounter.updateAndGet(v => math.max(v, tips.map(_.maxEntity).max))
     hash
   }
+
+  /** The tip manifest of every archetype committed to `dir`. */
+  private def tipManifests(dir: String): Seq[Manifest] =
+    scala.util.Using.resource(java.nio.file.Files.list(java.nio.file.Paths.get(dir))) {
+      _.iterator().asScala.toSeq.flatMap(p => parseManifest(p.resolve("_manifest")))
+    }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -761,9 +777,10 @@ final class ArchetypeStore(
   private def put(hash: String, preparedWithVersion: DataFrame,
       frames: Option[Map[Long, DataFrame]], v: Long): Unit = {
     val log = tables(hash)
-    require(preparedWithVersion.columns.sameElements(log.schema.fieldNames),
-      s"an append's columns ${preparedWithVersion.columns.mkString(", ")} are not " +
-        s"the archetype's ${log.schema.fieldNames.mkString(", ")}")
+    def columns(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    require(columns(preparedWithVersion.schema) == columns(log.schema),
+      s"an append's columns ${preparedWithVersion.schema.simpleString} are not " +
+        s"the archetype's ${log.schema.simpleString}")
     val held = for (h <- log.frames; f <- frames if !f.keys.exists(h.contains))
       yield h ++ f
     tables(hash) = log.copy(parts = log.parts :+ preparedWithVersion, frames = held,
@@ -791,14 +808,6 @@ final class ArchetypeStore(
 object ArchetypeStore {
   val VersionCol = "_v"
   val MergeKeys: Seq[String] = Seq("simulation", "run", "entity_id", "step")
-
-  /** An eager local checkpoint of `df`, stored serialized: the block
-    * store then sizes each block by its bytes instead of walking the
-    * rows' object graphs. Compaction snapshots and `World.stepEager`'s
-    * per-step frames use it.
-    */
-  private[ecs] def localSnapshot(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
   private def withVersion(s: org.apache.spark.sql.types.StructType) =
     org.apache.spark.sql.types.StructType(

@@ -115,8 +115,8 @@ final class World private (
   def step(dt: Double): Unit = advance(system.execute(currentStep, dt))
 
   /** One step whose per-archetype updates MATERIALIZE as concurrent
-    * Spark jobs (eager serialized local checkpoint per archetype, one
-    * future each, under the caller's local properties — see
+    * Spark jobs (eager localCheckpoint per archetype, one future
+    * each, under the caller's local properties — see
     * [[graft.QueryShape.concurrently]]): wall time is the DAG's critical
     * path instead of the processor sum — see [[SimpleSystem.stages]] —
     * and every step's lineage is cut at the materialization. State
@@ -125,7 +125,7 @@ final class World private (
     */
   def stepEager(dt: Double): Unit =
     advance(graft.QueryShape.concurrently(store.spark, system.execute(currentStep, dt).toSeq) {
-      case (h, df) => h -> ArchetypeStore.localSnapshot(df)
+      case (h, df) => h -> df.localCheckpoint(eager = true)
     }.toMap)
 
   /** Commit one step's updates at `currentStep + 1`, move to that step

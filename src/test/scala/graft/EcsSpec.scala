@@ -203,6 +203,34 @@ class EcsSpec extends SparkSpec {
     }
   }
 
+  test("a store attaching one archetype resumes its ids above every archetype in the directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ids").toString
+    val world = World.make(spark, "sim_test", "run_ids", optimizeInterval = 0)
+    world.spawn(Position(1.0, 1.0))
+    world.spawn(Position(2.0, 2.0), Velocity(1.0, 0.0))
+    world.store.commitDelta(dir)
+    val e3 = world.spawn(Position(3.0, 3.0), Velocity(1.0, 0.0))
+    world.store.commitDelta(dir) // publishes (Pos, Vel) only
+    val s = new ArchetypeStore(spark, "sim_test", "run_ids")
+    s.attachDurable(Seq(PosMeta), dir)
+    assert(s.addEntity(Seq(Position(4.0, 4.0)), 2L) > e3,
+      "a new id repeated a committed entity of another archetype")
+  }
+
+  test("an append whose column cannot take the archetype's type fails at the append") {
+    val w = World.make(spark, "sim_test", "run_types", optimizeInterval = 0)
+    w.spawnBatch(PosVel, posFrame(Seq(1L), 1.0)
+      .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+    val h = Archetype.hashOf(PosVel)
+    val next = w.query(PosVel).values.head.withColumn("step", lit(1L))
+    intercept[org.apache.spark.sql.AnalysisException](
+      w.store.upsert(h, next.withColumn("position__x", struct(lit(1.0)))))
+    // a column of a castable type takes the archetype's
+    w.store.upsert(h, next.withColumn("position__x", lit(7)))
+    assert(w.getHistory(PosVel).values.head.orderBy("step")
+      .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(1.0, 7.0))
+  }
+
   test("durable incremental commits: append-only deltas, re-attach, compaction") {
     val dir = java.nio.file.Files.createTempDirectory("graft_durable").toString
     val world = World.make(spark, "sim_test", "run_durable")
@@ -839,7 +867,7 @@ class EcsSpec extends SparkSpec {
       .select("position__x").collect().map(_.getDouble(0)).toSeq == Seq(5.0, 5.0))
   }
 
-  test("an append adds one part to the log: the history read plans one union of every append") {
+  test("k appends read back as one n-ary union of k + 1 parts, with no empty base part") {
     val w = World.make(spark, "sim_test", "run_one_union", optimizeInterval = 0)
     w.addProcessor(MovementProcessor)
     w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
@@ -854,7 +882,7 @@ class EcsSpec extends SparkSpec {
     assert(history.count() == 2L * (k + 1))
   }
 
-  test("compaction snapshots and stepEager frames are stored serialized") {
+  test("compaction snapshots are stored serialized") {
     import org.apache.spark.sql.GraftBridge
     /** Storage levels of the checkpointed RDDs a read scans. */
     def levels(df: org.apache.spark.sql.DataFrame) =
@@ -866,8 +894,7 @@ class EcsSpec extends SparkSpec {
     w.addProcessor(MovementProcessor)
     w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
       .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
-    w.stepEager(0.5)
-    assert(levels(w.query(PosVel).values.head) == ser, "stepEager's frame")
+    w.step(0.5)
     w.store.optimize()
     assert(levels(w.getHistory(PosVel).values.head) == ser, "optimize()'s snapshot")
     assert(w.query(PosVel).values.head.orderBy("entity_id")
