@@ -1,6 +1,6 @@
 package graft.ecs
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,23 +24,22 @@ import scala.jdk.CollectionConverters._
   * Spark-first design, NOT a port:
   *  - Each archetype table is an append-only DataFrame carrying an
   *    internal commit-version column `_v`. Upsert = pure append
-  *    (shuffle-free at write). While every append landed at a step the
-  *    archetype did not hold yet, no (entity_id, step) key can repeat:
-  *    the log then indexes each step's frame, and a query at a step
-  *    plans only that frame — a chain back to the last snapshot, not
-  *    the whole log (the reference's querier filters one step,
-  *    querier.py:24-45). Once an append may have rewritten a key,
-  *    latest-wins resolution happens at read with one window over the
-  *    merge keys (merge-on-read). This is how the same semantics stay
-  *    cheap on a 1000-executor cluster: writes never rewrite history,
-  *    and `optimize()` cuts the log's lineage — the analogue of the
-  *    reference's `table.optimize()` — and re-points every frame at
-  *    the new snapshot, which it stores serialized.
-  *  - An append is one projection added to the log's list of parts; it
-  *    never builds the log's DataFrame. The union of all parts is
-  *    planned once per read of the whole log (history, resolve,
-  *    compaction, durable commit), not once per append, so the driver's
-  *    analysis cost of a step does not grow with the log.
+  *    (shuffle-free at write). Each append is one part of the log,
+  *    tagged with the steps it may hold. `step` is a merge key, so a
+  *    read takes only the parts whose tags meet the steps it asks for
+  *    (the reference's querier filters `step IN (…)`,
+  *    querier.py:24-45), and resolves latest-wins with one window over
+  *    the merge keys (merge-on-read) only where two of those parts may
+  *    share a step. A query at a step the world stepped to plans that
+  *    step's append alone. This is how the same semantics stay cheap on
+  *    a 1000-executor cluster: writes never rewrite history, and
+  *    `optimize()` cuts the log's lineage — the analogue of the
+  *    reference's `table.optimize()` — into one snapshot, which it
+  *    stores serialized.
+  *  - An append never builds the log's DataFrame. The union of all
+  *    parts is planned once per read of the whole log (history,
+  *    resolve, compaction, durable commit), not once per append, so the
+  *    driver's analysis cost of a step does not grow with the log.
   *  - Persistence is one append-only commit log per archetype,
   *    published through a manifest: `commitDelta` writes the rows not
   *    yet in a directory, `compactDurable` + `vacuumDurable` fold the
@@ -72,7 +71,6 @@ final class ArchetypeStore(
   private val sigByHash = mutable.LinkedHashMap.empty[String, Seq[ComponentMeta]]
   private val tables = mutable.LinkedHashMap.empty[String, Log]
   private val pending = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Row]]
-  private val entitySig = mutable.HashMap.empty[Long, String]
   private val entityCounter = new AtomicLong(0L)
   private val commitCounter = new AtomicLong(0L)
   private val checkpointed = mutable.HashMap.empty[String, DataFrame]
@@ -87,8 +85,7 @@ final class ArchetypeStore(
     val hash = Archetype.hashOf(metas)
     if (!sigByHash.contains(hash)) {
       sigByHash(hash) = Archetype.signature(metas)
-      tables(hash) = Log(withVersion(Archetype.schemaOf(metas)), Vector.empty,
-        Some(Map.empty), 0L)
+      tables(hash) = Log(withVersion(Archetype.schemaOf(metas)), Vector.empty, 0L)
     }
     hash
   }
@@ -130,7 +127,6 @@ final class ArchetypeStore(
     val row = Row.fromSeq(
       Seq(simulation, run, entityId, step, true) ++ compValues :+ commitCounter.incrementAndGet())
     pending.getOrElseUpdate(hash, mutable.ArrayBuffer.empty) += row
-    entitySig(entityId) = hash
     entityId
   }
 
@@ -144,14 +140,15 @@ final class ArchetypeStore(
       .withColumn("run", lit(run))
       .withColumn("is_active", lit(true)), step)
 
-  /** Soft-delete: mark is_active=false for this entity at `step`
-    * (reference: store.py:160-170).
+  /** Soft-delete: mark is_active=false for this entity at `step` in
+    * every archetype where it is live there (reference:
+    * store.py:160-170).
     */
   def removeEntity(entityId: Long, step: Long): Unit = {
-    entitySig.get(entityId).foreach { hash =>
-      despawnWhere(hash, col("entity_id") === entityId && col("step") === step)
-      entitySig.remove(entityId)
-    }
+    flush()
+    val at = Some(Set(step))
+    sigByHash.keys.filter(isLive(_, entityId, at))
+      .foreach(tombstone(_, at, col("entity_id") === entityId))
   }
 
   /** Batch soft-delete on an archetype: APPENDS tombstone rows
@@ -159,24 +156,33 @@ final class ArchetypeStore(
     * version) rather than rewriting history in place — latest-wins
     * resolves them identically, and the append-only contract is what
     * lets `commitDelta` persist despawns incrementally. A tombstone
-    * repeats a live key, so the archetype's reads go through the
-    * latest-wins window from then on.
+    * repeats a live key, so reads at the steps the archetype held
+    * resolve through the latest-wins window; later steps' reads do not.
     */
-  def despawnWhere(hash: String, cond: org.apache.spark.sql.Column): Unit = {
+  def despawnWhere(hash: String, cond: Column): Unit = {
     flush()
-    // Resolve latest-wins over the FULL (sim, run) scope first, then
-    // apply cond: evaluating cond on raw rows would let a superseded
-    // version that happens to match tombstone a frame whose current
-    // state doesn't (and resolution over a cond-filtered subset could
-    // crown a stale version whose newer non-matching sibling was
-    // filtered out).
+    tombstone(hash, None, cond)
+  }
+
+  /** Tombstones each live row at `steps` (every step when None) whose
+    * current state matches `cond`: [[read]] resolves latest-wins before
+    * it applies `cond`, so a superseded version that happens to match
+    * never tombstones a frame whose current state doesn't.
+    */
+  private def tombstone(hash: String, steps: Option[Set[Long]], cond: Column): Unit = {
+    val log = tables(hash)
     val v = commitCounter.incrementAndGet()
-    val tombstones = resolveKeepVersion(tables(hash), runScope)
-      .filter(col("is_active") && cond)
+    val tombstones = read(log, steps, runScope, col("is_active") && cond)
       .withColumn("is_active", lit(false))
       .withColumn(VersionCol, lit(v))
-    put(hash, tombstones, None, v)
+    put(hash, Part(tombstones, steps.orElse(stepsOf(log.parts))), v)
   }
+
+  /** Whether `entityId` is live in the archetype at one of `steps` (at
+    * any step when None): one small job, none when no part may hold them.
+    */
+  private def isLive(hash: String, entityId: Long, steps: Option[Set[Long]]): Boolean =
+    !read(tables(hash), steps, runScope && col("entity_id") === entityId, col("is_active")).isEmpty
 
   /** Archetype MIGRATION — add/remove components on live entities
     * (reference scope: archetype/core/store.py keys tables by the
@@ -192,8 +198,7 @@ final class ArchetypeStore(
     * archetype's table.
     */
   def migrate(fromMetas: Seq[ComponentMeta], toMetas: Seq[ComponentMeta],
-      cond: org.apache.spark.sql.Column,
-      defaults: Map[String, org.apache.spark.sql.Column] = Map.empty): Unit = {
+      cond: Column, defaults: Map[String, Column] = Map.empty): Unit = {
     val fromHash = Archetype.hashOf(fromMetas)
     require(sigByHash.contains(fromHash),
       s"migrate: unknown source archetype $fromHash")
@@ -203,8 +208,8 @@ final class ArchetypeStore(
     // state, never a superseded version: a stale upserted version that
     // happens to match cond must neither tombstone a live frame whose
     // current state doesn't match, nor migrate with stale values.
-    val live = resolveKeepVersion(tables(fromHash), runScope)
-      .filter(col("is_active"))
+    val source = tables(fromHash)
+    val live = read(source, None, runScope, col("is_active"))
     // An entity migrates iff its LATEST live frame matches cond, and it
     // moves with that frame — an older frame that matches while the
     // newest doesn't must not migrate (the entity would otherwise be
@@ -223,9 +228,10 @@ final class ArchetypeStore(
       s"migrate: target components $missing have no source column and no default")
     // Tombstone exactly the resolved live frames whose current state
     // matches cond (lazy plans: `movers` is bound to the pre-append
-    // table, so despawning first is safe).
+    // table, so despawning first is safe). The movers hold one row per
+    // entity at steps of the source log, so they are tagged with those.
     despawnWhere(fromHash, cond)
-    upsert(toHash, out)
+    appendVersioned(toHash, out, None, stepsOf(source.parts))
   }
 
   /** Remove ONE component from ONE entity (reference:
@@ -239,22 +245,13 @@ final class ArchetypeStore(
   def removeComponentFromEntity(entityId: Long, meta: ComponentMeta): Unit = {
     flush()
     val host = sigByHash.collectFirst {
-      case (hash, sig) if sig.exists(_.name == meta.name) &&
-        sig.size > 1 &&
-        !resolveKeepVersion(tables(hash), runScope && col("entity_id") === entityId)
-          .filter(col("is_active")).isEmpty => (hash, sig)
+      case (hash, sig) if sig.exists(_.name == meta.name) && sig.size > 1 &&
+        isLive(hash, entityId, None) => sig
     }
-    val (hash, sig) = host.getOrElse(sys.error(
+    val sig = host.getOrElse(sys.error(
       s"removeComponentFromEntity: entity $entityId not found live in any " +
         s"archetype containing ${meta.name} with another component to keep"))
-    val smaller = sig.filterNot(_.name == meta.name)
-    migrate(sig, smaller, col("entity_id") === entityId)
-    // re-point (not remove) the entity's signature: the entity is still
-    // live in the smaller archetype, and removeEntity only acts on ids
-    // present in entitySig — dropping the entry here would make the
-    // entity undeletable through the normal API.
-    entitySig(entityId) = Archetype.hashOf(smaller)
-    ()
+    migrate(sig, sig.filterNot(_.name == meta.name), col("entity_id") === entityId)
   }
 
   // -------------------------------------------------------------------
@@ -275,30 +272,19 @@ final class ArchetypeStore(
   /** Latest-wins resolved view of one archetype, scoped to (sim, run). */
   def resolved(hash: String): DataFrame = {
     flush()
-    resolveKeepVersion(tables(hash), runScope).drop(VersionCol)
+    read(tables(hash), None, runScope, lit(true)).drop(VersionCol)
   }
 
   /** Latest-wins rows at `steps` that satisfy `cond`, per archetype
     * matching `metas`, scoped to (sim, run) (reference:
-    * querier.py:24-45). A window-free log reads only its frames at
-    * `steps`, so a step's plan is its frame's chain back to the last
-    * snapshot; otherwise the resolved log is filtered to `steps`.
+    * querier.py:24-45). Only the parts that may hold `steps` are read,
+    * so a step's plan is the chain of the append that wrote it back to
+    * the last snapshot.
     */
-  def atSteps(metas: Seq[ComponentMeta], steps: Seq[Long],
-      cond: org.apache.spark.sql.Column): Map[String, DataFrame] = {
+  def atSteps(metas: Seq[ComponentMeta], steps: Seq[Long], cond: Column): Map[String, DataFrame] = {
     flush()
     matchingHashes(metas).map { h =>
-      val log = tables(h)
-      h -> (log.frames match {
-        case Some(frames) =>
-          steps.distinct.flatMap(frames.get).reduceOption(_ unionByName _)
-            .getOrElse(spark.createDataFrame(
-              java.util.Collections.emptyList[Row](), log.schema))
-            .filter(runScope && cond).drop(VersionCol)
-        case None =>
-          resolveKeepVersion(log, runScope).drop(VersionCol)
-            .filter(col("step").isin(steps: _*) && cond)
-      })
+      h -> read(tables(h), Some(steps.toSet), runScope, cond).drop(VersionCol)
     }.toMap
   }
 
@@ -310,7 +296,7 @@ final class ArchetypeStore(
     flush()
     val scope = if (includeAllRuns) col("simulation") === simulation else runScope
     matchingHashes(metas).map { h =>
-      h -> resolveKeepVersion(tables(h), scope).drop(VersionCol)
+      h -> read(tables(h), None, scope, lit(true)).drop(VersionCol)
     }.toMap
   }
 
@@ -323,28 +309,29 @@ final class ArchetypeStore(
     * append; the read path resolves latest-wins. One append carries at
     * most one row per (entity_id, step): two such rows share one `_v`,
     * so which of them a read returns is unspecified. The store cannot
-    * tell which steps `df` touches, so the archetype's reads resolve
-    * through the latest-wins window from here on; [[upsertAt]] keeps
-    * them window-free.
+    * tell which steps `df` touches, so every read of the archetype
+    * takes this append and resolves it through the latest-wins window;
+    * [[upsertAt]] keeps reads at other steps window-free.
     */
-  def upsert(hash: String, df: DataFrame): Unit = appendVersioned(hash, df, None)
+  def upsert(hash: String, df: DataFrame): Unit = appendVersioned(hash, df, None, None)
 
   /** [[upsert]] of one step's frame: every row of `df` is stamped
-    * `step`. While the archetype holds no row at `step` yet, no key can
-    * repeat: the append becomes the log's frame at `step`, and reads
-    * keep skipping the latest-wins window.
+    * `step`, and only reads at `step` take the append. While the
+    * archetype holds no row at `step` yet, no key can repeat there, and
+    * those reads skip the latest-wins window.
     */
   def upsertAt(hash: String, df: DataFrame, step: Long): Unit =
-    appendVersioned(hash, df, Some(step))
+    appendVersioned(hash, df, Some(step), Some(Set(step)))
 
   /** Stamps `step` (when given) and a fresh `_v`, and orders the columns
     * as the archetype's schema and casts any column of another type
     * (nullability aside, as a union compares them) to it, in one
     * projection: every analysed Dataset costs the driver a pass of the
     * analyzer. A column that cannot be cast fails here, at the append,
-    * not at the log's next whole read.
+    * not at the log's next whole read. `steps` tags the part.
     */
-  private def appendVersioned(hash: String, df: DataFrame, step: Option[Long]): Unit = {
+  private def appendVersioned(hash: String, df: DataFrame, step: Option[Long],
+      steps: Option[Set[Long]]): Unit = {
     flush()
     val v = commitCounter.incrementAndGet()
     val given = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
@@ -353,23 +340,24 @@ final class ArchetypeStore(
       case f if given.get(f.name).contains(f.dataType.catalogString) => col(f.name)
       case f => col(f.name).cast(f.dataType).as(f.name)
     } :+ lit(v).as(VersionCol): _*)
-    put(hash, prepared, step.map(s => Map(s -> prepared)), v)
+    put(hash, Part(prepared, steps), v)
   }
 
   /** Plain append (reference: store.py:258-261 `update`). */
   def appendRows(hash: String, df: DataFrame): Unit = upsert(hash, df)
 
-  /** Compact: checkpoint each archetype's raw append log (every
-    * version, not the resolved view) and cut its lineage (the analogue
-    * of LanceDB `table.optimize()`). Call every few steps in a long loop.
-    * The archetypes materialize as concurrent jobs, each under the
-    * caller's SparkContext local properties
-    * ([[graft.QueryShape.concurrently]]). The snapshot becomes the log's
-    * one part, and every frame of a window-free log is re-pointed at
-    * its step of it; only after that are the previous compaction's
-    * checkpoint blocks released — a frame left on the old snapshot
-    * would read freed blocks. Long simulations so hold at most one
-    * snapshot per archetype.
+  /** Compact: checkpoint each archetype's append log and cut its
+    * lineage (the analogue of LanceDB `table.optimize()`). Call every
+    * few steps in a long loop. A log whose parts may repeat a key is
+    * checkpointed latest-wins resolved, `_v` kept, so reads of the
+    * snapshot skip the window. Each version it drops lost to a higher
+    * `_v`, and `commitDelta` writes that winner whenever it would have
+    * written the loser. The archetypes materialize as concurrent jobs,
+    * each under the caller's SparkContext local properties
+    * ([[graft.QueryShape.concurrently]]).
+    * The snapshot becomes the log's one part, tagged with the union of
+    * the parts' tags; only then are the previous compaction's
+    * checkpoint blocks released, so each archetype holds one snapshot.
     *
     * A local snapshot is stored serialized (`MEMORY_AND_DISK_SER`):
     * every later read deserializes it, but the block store sizes it by
@@ -388,13 +376,12 @@ final class ArchetypeStore(
         "reliableCheckpoints requires SparkContext.setCheckpointDir")
     val logs = tables.toSeq
     val snapshots = graft.QueryShape.concurrently(spark, logs) { case (_, log) =>
-      if (reliableCheckpoints) log.df.checkpoint(eager = true)
-      else log.df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+      val rows = if (mayRepeat(log.parts, None)) latestWinsKeepVersion(log.df) else log.df
+      if (reliableCheckpoints) rows.checkpoint(eager = true)
+      else rows.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
     }
     logs.zip(snapshots).foreach { case ((h, log), snapshot) =>
-      tables(h) = log.copy(parts = Vector(snapshot), frames = log.frames.map(_.map {
-        case (s, _) => s -> snapshot.filter(col("step") === s)
-      }))
+      tables(h) = log.copy(parts = Vector(Part(snapshot, stepsOf(log.parts))))
       checkpointed.put(h, snapshot).foreach(old =>
         GraftBridge.checkpointRdd(old).foreach(_.unpersist(false)))
     }
@@ -543,12 +530,10 @@ final class ArchetypeStore(
       .parquet(s"$dir/$hash")
       .filter(col("commit") >= m.base && col("commit") <= m.maxCommit)
 
-  /** How long a writer waits for the dir lock before failing, and the
-    * age past which a lock is presumed abandoned (crashed holder) and
-    * reclaimed. Spec-tunable.
+  /** How long a writer waits for the dir lock before failing.
+    * Spec-tunable.
     */
   var lockWaitMs: Long = 30000L
-  var lockStaleMs: Long = 600000L
 
   /** Serialize writers on a durable dir with an atomic lock file
     * (`Files.createFile` is the POSIX/HDFS put-if-absent primitive;
@@ -556,7 +541,7 @@ final class ArchetypeStore(
     * `commitDelta`s otherwise race stageCommit's reclaim-then-rename
     * against the other's manifest publish — the classic log-writer
     * conflict Delta solves the same way. Locks held across a crash
-    * are reclaimed after `lockStaleMs`.
+    * are reclaimed after `LockStaleMs`.
     */
   private def withDirLock[A](dir: String)(f: => A): A = {
     val lock = java.nio.file.Paths.get(s"$dir/_lock")
@@ -572,7 +557,7 @@ final class ArchetypeStore(
           val age = try System.currentTimeMillis() -
             java.nio.file.Files.getLastModifiedTime(lock).toMillis
           catch { case _: java.nio.file.NoSuchFileException => Long.MaxValue }
-          if (age > lockStaleMs) java.nio.file.Files.deleteIfExists(lock)
+          if (age > LockStaleMs) java.nio.file.Files.deleteIfExists(lock)
           else if (System.currentTimeMillis() > deadline)
             throw new IllegalStateException(
               s"commit lock at $lock held by another writer for ${age} ms — " +
@@ -708,8 +693,8 @@ final class ArchetypeStore(
         s"store expects $bucketCount — construct the store with " +
         s"entityBuckets matching the manifest")
     val schema = withVersion(Archetype.schemaOf(Archetype.signature(metas)))
-    tables(hash) = Log(schema, Vector(liveDurable(dir, hash, metas, m)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)), None, m.maxV)
+    tables(hash) = Log(schema, Vector(Part(liveDurable(dir, hash, metas, m)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*), None, repeats = true)), m.maxV)
     durableMaxV(watermarkKey(dir, hash)) = m.maxV
     val tips = tipManifests(dir)
     commitCounter.updateAndGet(v => math.max(v, tips.map(_.maxV).max))
@@ -733,58 +718,75 @@ final class ArchetypeStore(
 
   private def runScope = col("simulation") === simulation && col("run") === run
 
-  /** One archetype's append log: its appends as `parts`, in append
-    * order, each with the columns of `schema` in its order. `df`, their
-    * n-ary union, is built and analysed on the first read of this log
-    * value and then cached, so an append costs the driver no analysis
-    * of the log. The union is positional (`put` checks the columns):
-    * the analyzer resolves a by-name union into a chain of binary
-    * unions, one per part. `maxV` is the highest `_v` the log holds,
-    * which `commitDelta` compares with a directory's watermark.
-    *
-    * While no (entity_id, step) key can repeat in it, `frames` maps
-    * each step it holds to that step's rows: the append that wrote
-    * them, or the last snapshot filtered to the step. Its key set is
-    * the steps the log covers. `frames` is None once an append may have
-    * rewritten a key — for good: the log then resolves through the
-    * latest-wins window. One value carries all of it, so a reader on
-    * another thread (the streaming ingest appends from its own) never
-    * pairs a log with stale frames.
+  /** One append: its rows, in the log's column order, and the steps it
+    * may hold (a superset of those it holds; None when unknown). Only a
+    * part attached from a durable directory, whose commits may rewrite
+    * one another, `repeats` an (entity_id, step) key inside itself.
     */
-  private case class Log(schema: StructType, parts: Vector[DataFrame],
-      frames: Option[Map[Long, DataFrame]], maxV: Long) {
-    lazy val df: DataFrame = parts match {
-      case Vector() => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      case Vector(one) => one
-      case _ => GraftBridge.ofRows(spark, Union(parts.map(GraftBridge.analyzedPlan)))
+  private case class Part(df: DataFrame, steps: Option[Set[Long]], repeats: Boolean = false)
+
+  /** One archetype's append log: its `parts`, in append order. `df`,
+    * their n-ary union, is built and analysed on the first whole-log
+    * read of this log value and then cached, so an append costs the
+    * driver no analysis of the log. The union is positional (`put`
+    * checks the columns): the analyzer resolves a by-name union into a
+    * chain of binary unions, one per part. `maxV` is the highest `_v`
+    * the log holds, which `commitDelta` compares with a directory's
+    * watermark.
+    */
+  private case class Log(schema: StructType, parts: Vector[Part], maxV: Long) {
+    lazy val df: DataFrame = union(parts)
+    def union(taken: Seq[Part]): DataFrame = taken match {
+      case Seq() => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      case Seq(one) => one.df
+      case _ => GraftBridge.ofRows(spark, Union(taken.map(p => GraftBridge.analyzedPlan(p.df))))
     }
   }
 
-  /** The log's rows under `scope`, latest `_v` per merge key: the scoped
-    * log itself while no key can repeat, else the window.
+  /** Every read of a log: its rows under `scope` at `steps` (at every
+    * step when None), latest `_v` per merge key, that satisfy `where`.
+    * It takes only the parts that may hold `steps`, filters to them
+    * only when a tag is not inside them, and runs the latest-wins window
+    * only when the parts taken may repeat a key.
     */
-  private def resolveKeepVersion(log: Log, scope: org.apache.spark.sql.Column): DataFrame = {
-    val scoped = log.df.filter(scope)
-    if (log.frames.isDefined) scoped else latestWinsKeepVersion(scoped)
+  private def read(log: Log, steps: Option[Set[Long]], scope: Column, where: Column): DataFrame = {
+    val taken = log.parts.filter(within(_, steps).forall(_.nonEmpty))
+    val rows = if (taken.size == log.parts.size) log.df else log.union(taken)
+    // the step test goes first: on a snapshot it rejects most rows
+    // before the scope's string compares run
+    val narrowed = steps.filterNot(s => taken.forall(_.steps.exists(_.subsetOf(s))))
+      .fold(scope)(s => col("step").isin(s.toSeq: _*) && scope)
+    if (mayRepeat(taken, steps)) latestWinsKeepVersion(rows.filter(narrowed)).filter(where)
+    else rows.filter(narrowed && where)
   }
 
-  /** Add version-stamped rows, whose highest `_v` is `v`, to an
-    * archetype's log as one more part; the log's union is not built
-    * here. `frames` maps every step the rows carry to its rows, or is
-    * None when the caller cannot say; the log keeps its window-free
-    * reads only while no append lands at a step it already holds.
+  /** The steps of `steps` (every step when None) `part` may hold. */
+  private def within(part: Part, steps: Option[Set[Long]]): Option[Set[Long]] =
+    (part.steps ++ steps).reduceOption(_ intersect _)
+
+  /** Whether an (entity_id, step) key at `steps` may repeat across
+    * `parts`: one part repeats keys, or two may hold one step.
     */
-  private def put(hash: String, preparedWithVersion: DataFrame,
-      frames: Option[Map[Long, DataFrame]], v: Long): Unit = {
+  private def mayRepeat(parts: Seq[Part], steps: Option[Set[Long]]): Boolean =
+    parts.exists(_.repeats) || parts.size > 1 && {
+      val held = parts.map(within(_, steps))
+      held.contains(None) || held.flatten.map(_.size).sum > held.flatten.flatten.distinct.size
+    }
+
+  /** The union of the parts' tags; None when one is unknown. */
+  private def stepsOf(parts: Seq[Part]): Option[Set[Long]] =
+    parts.foldLeft(Option(Set.empty[Long]))((acc, p) => for (a <- acc; s <- p.steps) yield a ++ s)
+
+  /** Add a part, whose highest `_v` is `v`, to an archetype's log; the
+    * log's union is not built here.
+    */
+  private def put(hash: String, part: Part, v: Long): Unit = {
     val log = tables(hash)
     def columns(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
-    require(columns(preparedWithVersion.schema) == columns(log.schema),
-      s"an append's columns ${preparedWithVersion.schema.simpleString} are not " +
+    require(columns(part.df.schema) == columns(log.schema),
+      s"an append's columns ${part.df.schema.simpleString} are not " +
         s"the archetype's ${log.schema.simpleString}")
-    val held = for (h <- log.frames; f <- frames if !f.keys.exists(h.contains))
-      yield h ++ f
-    tables(hash) = log.copy(parts = log.parts :+ preparedWithVersion, frames = held,
-      maxV = math.max(log.maxV, v))
+    tables(hash) = log.copy(parts = log.parts :+ part, maxV = math.max(log.maxV, v))
   }
 
   /** Materialize buffered single-row spawns into their tables. Their
@@ -796,8 +798,7 @@ final class ArchetypeStore(
         val schema = withVersion(Archetype.schemaOf(sigByHash(hash)))
         val df = spark.createDataFrame(rows.toSeq.asJava, schema)
         // index 3 is `step` and the last is `_v` in addEntityValues' row layout
-        put(hash, df, Some(rows.map(_.getLong(3)).distinct
-          .map(s => s -> df.filter(col("step") === s)).toMap),
+        put(hash, Part(df, Some(rows.map(_.getLong(3)).toSet)),
           rows.iterator.map(r => r.getLong(r.length - 1)).max)
         rows.clear()
       }
@@ -807,6 +808,8 @@ final class ArchetypeStore(
 
 object ArchetypeStore {
   val VersionCol = "_v"
+  // age past which a durable dir lock's holder is presumed crashed
+  private val LockStaleMs = 600000L
   val MergeKeys: Seq[String] = Seq("simulation", "run", "entity_id", "step")
 
   private def withVersion(s: org.apache.spark.sql.types.StructType) =

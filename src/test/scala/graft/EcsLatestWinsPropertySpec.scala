@@ -11,13 +11,15 @@ import org.scalacheck.rng.Seed
 import scala.collection.mutable
 
 /** Random mixes of spawnBatch, spawnAt, World.step, World.stepEager,
-  * step-less upsert, despawnWhere, optimize and commitDelta into one of
-  * two durable directories against an in-test merge-insert model keyed
-  * on (entity_id, step) (reference: store.py:250-256). Whichever read
-  * path the store picks — the append log's per-step frames, or the
-  * latest-wins window — `getHistory` and `World.query` at every step
-  * must equal the model, and after each commit a fresh store attached
-  * to that directory must read the model's history.
+  * step-less upsert, despawnWhere, World.despawn, optimize, and
+  * commitDelta or compactDurable on one of two durable directories
+  * against an in-test merge-insert model keyed on (entity_id, step)
+  * (reference: store.py:250-256). Whether a read resolves its parts
+  * through the latest-wins window or reads them as they are,
+  * `getHistory` and `World.query` at every step must equal the model.
+  * After each commit a fresh store attached to that directory must
+  * read the model's history, and after each compaction the history
+  * the directory last committed.
   */
 class EcsLatestWinsPropertySpec extends SparkSpec {
 
@@ -27,8 +29,10 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
   private final case class Step(eager: Boolean) extends Op
   private final case class Upsert(step: Long, ids: Seq[Long], x: Double) extends Op
   private final case class DespawnWhere(residue: Int) extends Op
+  private final case class Despawn(id: Long, step: Long) extends Op
   private case object Optimize extends Op
   private final case class Commit(dir: Int) extends Op
+  private final case class CompactDurable(dir: Int) extends Op
 
   // ids 1..5 overlap the counter's first ids, so spawnAt can hit a
   // spawnBatch key; steps 0..3 reach both held and future steps
@@ -42,8 +46,11 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
     1 -> Gen.const(Step(eager = true)),
     1 -> (for (s <- step; i <- ids; v <- x) yield Upsert(s, i, v)),
     1 -> Gen.choose(0, 2).map(DespawnWhere(_)),
+    // ids 1..5 reach spawnBatch's and the counter's entities alike
+    2 -> (for (i <- Gen.choose(1L, 5L); s <- step) yield Despawn(i, s)),
     1 -> Gen.const(Optimize),
-    2 -> Gen.choose(0, 1).map(Commit(_)))
+    2 -> Gen.choose(0, 1).map(Commit(_)),
+    1 -> Gen.choose(0, 1).map(CompactDurable(_)))
 
   private object PlusOne extends Processor {
     val components: Seq[ComponentMeta] = Seq(PosMeta)
@@ -71,7 +78,15 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
       .as[(Long, Long, Double, Boolean)].collect().toSeq.sorted
     def modelRows = model.toSeq
       .map { case ((i, s), (v, live)) => (i, s, v, live) }.sorted
+    // the model as each directory last committed it
+    val committed = mutable.Map.empty[Int, Seq[(Long, Long, Double, Boolean)]]
     var durable = Prop.passed
+    def checkAttached(d: Int, label: String): Unit = {
+      val attached = new ArchetypeStore(spark, "sim_prop", run)
+      attached.attachDurable(pos, dirs(d))
+      val (got, want) = (rows(attached.getHistory(pos)(hash)), committed(d))
+      durable = durable && ((got == want) :| s"dir $d $label $got != model $want")
+    }
     ops.foreach {
       case SpawnBatch(is, v) =>
         world.spawnBatch(pos, is.map(i => (i, v + i, 0.0))
@@ -96,14 +111,18 @@ class EcsLatestWinsPropertySpec extends SparkSpec {
         model.foreach { case (k @ (i, _), (v, live)) =>
           if (live && i % 3 == r) model(k) = (v, false)
         }
+      case Despawn(i, s) =>
+        world.despawn(i, Some(s))
+        model.get((i, s)).foreach { case (v, _) => model((i, s)) = (v, false) }
       case Optimize =>
         world.store.optimize()
       case Commit(d) =>
         world.store.commitDelta(dirs(d))
-        val attached = new ArchetypeStore(spark, "sim_prop", run)
-        attached.attachDurable(pos, dirs(d))
-        val (got, want) = (rows(attached.getHistory(pos)(hash)), modelRows)
-        durable = durable && ((got == want) :| s"dir $d re-attached $got != model $want")
+        committed(d) = modelRows
+        checkAttached(d, "re-attached")
+      case CompactDurable(d) =>
+        world.store.compactDurable(dirs(d))
+        if (committed.contains(d)) checkAttached(d, "compacted")
     }
     val history = world.getHistory(pos)(hash)
     val gotHistory = rows(history)

@@ -739,6 +739,13 @@ class EcsSpec extends SparkSpec {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.size
 
+  /** The partition columns of each Window in a read's optimized plan. */
+  private def windowPartitions(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
+        w.partitionSpec.flatMap(_.references.map(_.name))
+    }
+
   /** `resolved`, `getHistory` and the query `World.query` runs, over one
     * archetype of `store`.
     */
@@ -754,6 +761,9 @@ class EcsSpec extends SparkSpec {
     import spark.implicits._
     ids.map(i => (i, x, 0.0)).toDF("entity_id", "position__x", "position__y")
   }
+
+  private def movers(ids: Seq[Long], x: Double) =
+    posFrame(ids, x).withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0))
 
   private def assertWindows(label: String, store: ArchetypeStore,
       metas: Seq[ComponentMeta], step: Long, expected: Boolean): Unit =
@@ -779,8 +789,7 @@ class EcsSpec extends SparkSpec {
     ).foreach { case (label, stepOnce) =>
       val w = World.make(spark, "sim_test", s"run_fast_$label", optimizeInterval = 2)
       w.addProcessor(MovementProcessor)
-      w.spawnBatch(PosVel, posFrame(Seq(1L, 2L), 1.0)
-        .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+      w.spawnBatch(PosVel, movers(Seq(1L, 2L), 1.0))
       (1 to 3).foreach(_ => stepOnce(w))
       assertWindows(label, w.store, PosVel, w.currentStep, expected = false)
       assert(w.query(PosVel).values.head.orderBy("entity_id")
@@ -806,8 +815,7 @@ class EcsSpec extends SparkSpec {
     assertWindows("appendRows", app.store, pos, 0L, expected = true)
 
     val dw = seeded("despawn_where")
-    dw.spawnBatch(PosVel, posFrame(Seq(7L), 1.0)
-      .withColumn("velocity__vx", lit(1.0)).withColumn("velocity__vy", lit(0.0)))
+    dw.spawnBatch(PosVel, movers(Seq(7L), 1.0))
     dw.store.despawnWhere(posHash, col("entity_id") === 1L)
     assertWindows("despawnWhere", dw.store, pos, 0L, expected = true)
     assertWindows("despawnWhere, other archetype", dw.store, PosVel, 0L, expected = false)
@@ -820,7 +828,16 @@ class EcsSpec extends SparkSpec {
     mig.migrateWhere(pos, PosVel, col("entity_id") === 1L,
       defaults = Map("velocity__vx" -> lit(0.0), "velocity__vy" -> lit(0.0)))
     assertWindows("migrate source", mig.store, pos, 0L, expected = true)
-    assertWindows("migrate target", mig.store, PosVel, 0L, expected = true)
+    // the target's one part holds the movers, at most one row per key:
+    // its reads plan migrate's own window, which picks each entity's
+    // latest frame (partitioned by entity_id), and no latest-wins window
+    reads(mig.store, PosVel, 0L).foreach { case (read, df) =>
+      val partitions = windowPartitions(df)
+      assert(partitions == Seq(Seq("entity_id")), s"migrate target / $read: $partitions")
+    }
+    assert(mig.query(PosVel)(Archetype.hashOf(PosVel))
+      .select("entity_id", "position__x", "velocity__vx").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq == Seq((1L, 1.0, 0.0)))
 
     // a late spawnBatch at a held step, as ecs_component_diff does
     val late = seeded("late_batch")
@@ -839,6 +856,91 @@ class EcsSpec extends SparkSpec {
     val durable = new ArchetypeStore(spark, "sim_test", "run_fb_attach")
     durable.attachDurable(pos, dir)
     assertWindows("attachDurable", durable, pos, 0L, expected = true)
+  }
+
+  /** Whether the query `World.query` runs on one archetype at `step`
+    * plans a Window.
+    */
+  private def queryWindowed(w: World, metas: Seq[ComponentMeta], step: Long): Boolean =
+    windowCount(w.query(metas, Some(step))(Archetype.hashOf(metas))) > 0
+
+  private def liveXs(w: World, metas: Seq[ComponentMeta], step: Long): Seq[(Long, Double)] =
+    w.query(metas, Some(step))(Archetype.hashOf(metas)).select("entity_id", "position__x")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
+
+  // These tests step with stepEager: it checkpoints the step's frame,
+  // so a read's plan holds only the windows the read itself adds. A
+  // World.step frame carries in its lineage the window of the step-0
+  // read that the processor transformed.
+
+  test("a late spawnBatch at a held step windows reads at that step only") {
+    val w = World.make(spark, "sim_test", "run_tag_late", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawnBatch(PosVel, movers(Seq(1L, 2L), 1.0))
+    w.spawnBatch(PosVel, movers(Seq(3L), 4.0))
+    w.stepEager(0.5)
+    assert(!queryWindowed(w, PosVel, 1L), "step 1 was written by one append")
+    assert(queryWindowed(w, PosVel, 0L), "two appends hold step 0")
+    assert(liveXs(w, PosVel, 1L) == Seq((1L, 1.5), (2L, 1.5), (3L, 4.5)))
+  }
+
+  test("despawnWhere windows the steps the archetype held, not the steps after it") {
+    val w = World.make(spark, "sim_test", "run_tag_despawn", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawnBatch(PosVel, movers(Seq(1L, 2L, 3L), 1.0))
+    w.despawnWhere(PosVel, col("entity_id") === 2L)
+    w.stepEager(0.5)
+    assert(!queryWindowed(w, PosVel, 1L))
+    assert(liveXs(w, PosVel, 1L) == Seq((1L, 1.5), (3L, 1.5)))
+    assert(liveXs(w, PosVel, 0L) == Seq((1L, 1.0), (3L, 1.0)))
+  }
+
+  test("optimize() resolves a log that may repeat a key: its reads skip the window") {
+    val pos = Seq(PosMeta)
+    val w = World.make(spark, "sim_test", "run_tag_optimize", optimizeInterval = 0)
+    w.spawnBatch(pos, posFrame(Seq(1L, 2L, 3L), 1.0))
+    w.despawnWhere(pos, col("entity_id") === 1L)
+    def history = w.getHistory(pos)(Archetype.hashOf(pos))
+      .select("entity_id", "step", "position__x", "is_active").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSeq.sorted
+    val before = history
+    assert(before.map(_._4) == Seq(false, true, true))
+    w.store.optimize()
+    assertWindows("despawnWhere, optimize", w.store, pos, 0L, expected = false)
+    assert(history == before)
+    assert(liveXs(w, pos, 0L) == Seq((2L, 1.0), (3L, 1.0)))
+  }
+
+  test("World.despawn at a step windows reads at that step only") {
+    val w = World.make(spark, "sim_test", "run_tag_remove", optimizeInterval = 0)
+    w.addProcessor(MovementProcessor)
+    w.spawnBatch(PosVel, movers(Seq(1L, 2L), 1.0))
+    w.step(0.5); w.step(0.5)
+    w.despawn(1L, Some(1L))
+    assert(!queryWindowed(w, PosVel, 0L) && !queryWindowed(w, PosVel, 2L))
+    assert(queryWindowed(w, PosVel, 1L))
+    assert(liveXs(w, PosVel, 1L) == Seq((2L, 1.5)))
+    assert(liveXs(w, PosVel, 2L) == Seq((1L, 2.0), (2L, 2.0)))
+  }
+
+  test("despawn removes an entity that arrived by spawnBatch") {
+    val pos = Seq(PosMeta)
+    val w = World.make(spark, "sim_test", "run_despawn_batch")
+    w.spawnBatch(pos, posFrame(Seq(1L, 2L), 1.0))
+    w.despawn(1L)
+    assert(liveXs(w, pos, 0L) == Seq((2L, 1.0)))
+  }
+
+  test("despawn removes an entity moved by migrateWhere") {
+    val pos = Seq(PosMeta)
+    val w = World.make(spark, "sim_test", "run_despawn_migrated")
+    w.spawnBatch(pos, posFrame(Seq(1L, 2L), 1.0))
+    w.migrateWhere(pos, PosVel, col("entity_id") === 1L,
+      defaults = Map("velocity__vx" -> lit(0.0), "velocity__vy" -> lit(0.0)))
+    assert(liveXs(w, PosVel, 0L) == Seq((1L, 1.0)))
+    w.despawn(1L)
+    assert(liveXs(w, PosVel, 0L).isEmpty)
+    assert(liveXs(w, pos, 0L) == Seq((2L, 1.0)))
   }
 
   /** Nodes in a DataFrame's analyzed plan. */
