@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.BoundedOffsetPairs
 
 /** Deduplication suite (SURVEY §2.C) over `documents`.
   *
   * Scale design: every near-dup path generates candidate pairs through
-  * an equi-join key (LSH band hash, simhash block, or bounded id
-  * offset), never an O(n²) cross join; all hashing is codegen'd
-  * built-ins (xxhash64/md5/higher-order array functions) — no UDFs.
+  * an equi-join key (LSH band hash, simhash block) or the bounded
+  * id-offset window ([[BoundedOffsetPairs]]), never an O(n²) cross
+  * join; all hashing is codegen'd built-ins (xxhash64/md5/higher-order
+  * array functions) — no UDFs.
   */
 object DedupQueries {
 
@@ -48,14 +50,15 @@ object DedupQueries {
     * band-bucket skew (the number that decides 100 TB feasibility).
     */
   /** Per-doc 64-permutation minhash SIGNATURE (doc_id, sig) — ONE
-    * native pass per row (r10, [[graft.functions.MinhashSigExpr]]):
+    * native pass per row ([[graft.functions.MinhashSigExpr]]):
     * the explode(shingles) × explode(0..63) → groupBy.min shape this
     * replaces pushed |docs|·|shingles|·64 rows through a hash
     * aggregate (~64 M at sf0.1, ~64 G at sf100 — the bulk of the
     * minhash family's time). Same shingle fold, same permutation
     * hash, bit-equal minima (min over the multiset == min over the
     * distinct set). Docs with no tokens are absent, exactly as the
-    * exploded shape emitted no rows for them.
+    * exploded shape emitted no rows for them. Measurements:
+    * OPTIMIZATION_r10.md.
     */
   private[graft] def minhashSigFor(docFrame: DataFrame): DataFrame =
     docFrame
@@ -81,7 +84,7 @@ object DedupQueries {
   /** The per-permutation minhash values (doc_id, j, m) the bands fold
     * over — C10 compares them pairwise to estimate Jaccard. Exploded
     * view of the native signature; (doc_id, j, m) rows are bit-equal
-    * to the pre-r10 aggregate's.
+    * to the former per-permutation aggregate's.
     */
   private[graft] def minhashValuesFor(docFrame: DataFrame): DataFrame =
     minhashSigFor(docFrame)
@@ -89,15 +92,14 @@ object DedupQueries {
 
   // C2 — MinHash+LSH candidate pairs: same (band_id, band_hash) bucket.
   // Signatures compute over exact-content REPRESENTATIVES (min doc_id
-  // per text — C7/C3's r5 collapse applied here too): identical texts
+  // per text — C7/C3's collapse applied here too): identical texts
   // share every band, so un-collapsed exact families inflate the
   // bucket self-join quadratically in family size (the sf1 replica
   // probe measured 13× for 10× data; collapsed simhash sat at 1.4× on
   // the same data). Exact families are C1's output; near-dup
   // candidacy is decided once per distinct content.
   private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    // r10 decade-4 finding (this key was never sf100-probed before):
-    // 794 s under the r9 code at sf100, ~90× its sf10 wall. Diagnosis
+    // At sf100 this key ran 794 s, ~90× its sf10 wall. Diagnosis
     // (one bucket-stats job): the 8-band bucket self-join emits ~1.0G
     // pair OCCURRENCES at sf100 with a hottest bucket of 9311 —
     // identical-signature short-doc families planted by the synthetic
@@ -113,7 +115,7 @@ object DedupQueries {
     // array carry through the 40M-row SMJ sort costs more than the
     // narrow-row distinct exchange saves below decade 4. Kept: the
     // distinct shape; the sf100 tail is output-bound by the planted
-    // family structure (documented in OPTIMIZATION_r10.md).
+    // family structure. Measurements: OPTIMIZATION_r10.md.
     // persist: the self-join would otherwise recompute the whole
     // signature pipeline for both sides (bands ≈ 8 rows/doc — tiny
     // next to the corpus, and the expensive part is above it)
@@ -174,9 +176,9 @@ object DedupQueries {
   // justifies trusting band-bucket candidacy at 100 TB, measured by
   // the engine itself on its own corpus rather than asserted offline.
   // Same representative collapse as C2. Two scale contracts, both
-  // added after the r8 sf10 probe measured 24.6× (pairs grew 40.7k →
+  // added after an sf10 probe measured 24.6× (pairs grew 40.7k →
   // 3.97M for 10× docs — band buckets concentrate statistical twins,
-  // max df 110 → 967):
+  // max df 110 → 967; SURVEY.md C10):
   //  1. BOUNDED pool per band bucket (C3's contract): a pair survives
   //     iff its LOWER id ranks ≤ 256 in some shared bucket — capped
   //     join volume Σ df·min(df,256), oracle-replayed rank.
@@ -191,7 +193,8 @@ object DedupQueries {
   private def dedupMinhashEst(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftBridge
     val reps = docs(s, dir).groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-    // r11, measured THREE times before landing (VERDICT r10 ask #1):
+    // Two alternatives were built, measured and rejected
+    // (OPTIMIZATION_r11.md §1):
     //  - A packed-pool rewrite (per-bucket payload pools + canonical-
     //    band emission, the C5/C3 shape) was BUILT AND REJECTED: it
     //    replicates every doc's ~1.5 KB (sig, ps) payload once per
@@ -233,8 +236,8 @@ object DedupQueries {
         Seq("band_id", "band_hash"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    // (r10 measured, NOT kept: a shuffle_hash hint on these two
-    // attach joins cut sf10 22% by skipping the SMJ sorts, but
+    // (Measured, NOT kept, OPTIMIZATION_r10.md: a shuffle_hash hint on
+    // these two attach joins cut sf10 22% by skipping the SMJ sorts, but
     // REGRESSED sf100 376 -> 483 s — the per-partition hash builds of
     // the feature rows spill at decade 4. SMJ's sort is the
     // scale-safe shape here.)
@@ -327,7 +330,7 @@ object DedupQueries {
     */
   private[graft] def simhashSigs(s: SparkSession, dir: String): DataFrame = {
     // signatures over exact-content REPRESENTATIVES (min doc_id per
-    // text) — C7's r5 lesson applied family-wide: the block self-join
+    // text) — C7's collapse applied family-wide: the block self-join
     // below is quadratic in duplicate-family size (the sf1 replica
     // probe put the un-collapsed query at 13.8× for 10× data), exact
     // families are C1's output, and a signature computes once per
@@ -358,7 +361,8 @@ object DedupQueries {
   // pins the equivalence). Why not 4 single blocks: bucket pair
   // volume Σdf² over 16-bit keys is quadratic in the corpus
   // (~n²/2¹⁶ uniform, far worse under real per-language bit
-  // correlation) — the r8 sf10 probe measured 52× wall for 10× data.
+  // correlation) — an sf10 probe measured 52× wall for 10× data
+  // (SURVEY.md's scale probes).
   // Pair keys SQUARE the per-bucket collision probability instead.
   // The hamming verify also runs BEFORE the distinct now, so the
   // dedup shuffle carries only true near-dup pairs, not every bucket
@@ -372,14 +376,14 @@ object DedupQueries {
     * `bench/dedup_cap_probe.json`, so the constant is evidence, not
     * folklore).
     *
-    * PIECE LAYOUT (r10, the r9 verdict's documented knob): 5 pieces
+    * PIECE LAYOUT (OPTIMIZATION_r10.md): 5 pieces
     * (4×13 + 1×12 bits) → 10 piece-PAIR tables of ≤ 26-bit keys,
     * replacing the 6-piece/15-table/21-22-bit layout. Same d ≤ 3
     * pigeonhole completeness (≤ 3 flips hit ≤ 3 pieces → ≥ 2 intact
     * pieces → their pair table collides; SimhashBlockSpec proves it
     * exhaustively and that d = 3 is tight — 4 flips across 4 pieces
     * leave no intact pair), but 10/15 the explode volume and ~16-32×
-    * sparser keys: the r9 sf100 probe measured the 21-bit keys
+    * sparser keys: an sf100 probe measured the 21-bit keys
     * concentrating statistically-twinned same-language docs (max df
     * 80k at sf10) into cap-transition buckets — wider keys push the
     * cap regime a decade out.
@@ -401,7 +405,7 @@ object DedupQueries {
         }: _*)).as("pk"))
       .select(col("doc_id"), col("simhash"),
         col("pk.tbl").as("tbl"), col("pk.key").as("key"))
-    // A [[graft.operators.CappedPool]] per (tbl, key): the r8 sf10
+    // A [[graft.operators.CappedPool]] per (tbl, key): an sf10
     // diagnostic measured sum(df^2) = 49G over piece-pair keys on the
     // 500k-doc corpus (statistically-twinned same-language docs
     // concentrate even wide keys: max df 431k at sf100 for 26-bit
@@ -583,9 +587,9 @@ object DedupQueries {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .groupBy(col("v")).agg(min(col("vec_id")).as("vec_id"))
       .select(col("vec_id"), col("v"))
-    // OCCUPANCY-TARGETED bits (the knn_graph r8 prescription, applied
-    // here after the r9 sf100 probe measured this key as the board's
-    // worst scaler at 11.3×/251 s): fixed bits=8 left expected bucket
+    // OCCUPANCY-TARGETED bits (knn_graph's rule, applied here after
+    // an sf100 probe measured this key as the board's worst scaler at
+    // 11.3×/251 s, OPTIMIZATION_r10.md): fixed bits=8 left expected bucket
     // occupancy n/256 ≈ 7800 at the 2M-vector decade, so the capped
     // pool×bucket join evaluated ~4G candidate cosines; adaptive bits
     // pins occupancy ≤ 32 and candidate volume to Θ(n·tables·occ).
@@ -596,7 +600,7 @@ object DedupQueries {
     // not a semantic input, one cheap columnar count.
     val n = Tables.load(s, dir, "embeddings").count()
     val bits = graft.operators.RandomHyperplaneLsh.adaptiveBits(n)
-    // bucketCap=256 bounds per-bucket pair volume (the r8 sf10 probe
+    // bucketCap=256 bounds per-bucket pair volume (an sf10 probe
     // OOM'd the uncapped bucket self-join on the 2M-vector corpus
     // where jitter families co-bucket); the pool rank is oracle-
     // mirrored below and never binds at test SFs
@@ -642,7 +646,7 @@ object DedupQueries {
   // Pregel-shaped pattern that scales (each iteration is one
   // equi-join + groupBy min; state checkpointed to cut lineage).
   //
-  // Iteration hygiene (r2): the convergence count is folded into the
+  // Iteration hygiene: the convergence count is folded into the
   // checkpoint-materializing pass via a LongAccumulator (no separate
   // count() job — task retries can only overcount, which at worst
   // costs one extra no-op iteration); checkpoints are RELIABLE
@@ -774,7 +778,7 @@ object DedupQueries {
     // (df ≤ n/20) lets per-fp join fan-out GROW with the corpus: the
     // self-join pays Σ df², and under a Zipfian fp distribution the
     // mass between the old threshold and any constant is superlinear —
-    // the r8 sf1 probe measured 22× for 10× docs. An absolute df cap
+    // an sf1 probe measured 22× for 10× docs. An absolute df cap
     // is the MOSS-style index bound: a fingerprint seen in > maxDf
     // distinct contents is template/boilerplate signal, not a dup
     // family (real near-dup pairs share ≥ 10 RARE fps). Trade-off: a
@@ -1207,7 +1211,7 @@ object DedupQueries {
     import s.implicits._
     val reps = docs(s, dir).groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-    // —— signature-family collapse (r10, after the sf100 spill death:
+    // —— signature-family collapse (an sf100 run died of spill:
     // `No space left on device` with 67 GB free). Band hashes are pure
     // functions of the 64-value minhash signature, so CANDIDACY is
     // decided per SIGNATURE, not per doc: docs sharing a signature
@@ -1224,13 +1228,14 @@ object DedupQueries {
     // exists) — no quadratic pair set ever becomes rows. Bit-identical
     // to the oracle's DISTINCT-pair counts: the decomposition is by
     // pair identity (same-signature vs not), not an approximation.
-    // r10: the signature is ONE native pass per doc (MinhashSigExpr,
+    // The signature is ONE native pass per doc (MinhashSigExpr,
     // bit-equal minima in j order) — no per-permutation rows, no
-    // collect_list re-assembly. r11: the same pass also carries the
+    // collect_list re-assembly; the same pass also carries the
     // sorted-distinct shingle-hash set (WordShingleModHashesExpr) —
     // the exact ground truth below reads it row-locally instead of
     // re-deriving exploded (doc, p) rows. sig NULL ⟺ ps empty (both
     // need ≥1 token), so the doc set matches the old exploded frames.
+    // Measurements: OPTIMIZATION_r10.md, OPTIMIZATION_r11.md §2.
     val feat = reps
       .select(col("doc_id"),
         org.apache.spark.sql.GraftBridge.column(graft.functions.MinhashSigExpr(
@@ -1262,7 +1267,7 @@ object DedupQueries {
     val famClosed = fams
       .agg(coalesce(sum(expr("nf * (nf - 1) DIV 2")), lit(0L)))
       .collect()(0).getLong(0) // one scalar: Σ C(n_f, 2)
-    // First-collision emission (r10, second iteration): the family
+    // First-collision emission: the family
     // collapse alone did NOT survive sf100 — the sf100 probe
     // (SURVEY.md, OPTIMIZATION_r10.md) measured the cross-family r=4
     // buckets at Σ C(df,2) ≈ 2.5G pair occurrences (80M band rows,
@@ -1424,53 +1429,44 @@ object DedupQueries {
   // edits). The scale discipline is the LENGTH lower bound —
   // |len(a) − len(b)| ≤ lev(a, b) — applied BEFORE the quadratic-cost
   // levenshtein: candidates are id-window pairs passing the cheap
-  // length test, and only those pay the DP. Both engines ship the
-  // same unit-cost levenshtein (codegen'd in Spark), and the 20%
-  // threshold is the exact integer test lev·5 ≤ max(len) — no float.
-  // Exact-content families collapse to representatives first (C1's
-  // trick), so identical texts never reach the DP. Output = every
-  // audited candidate with its bound and distance — the oracle
-  // equality proves the bound never lied (a row where bound > lev
-  // would diverge).
+  // length test, and only those pay the DP. The 20% threshold is the
+  // exact integer test lev·5 ≤ max(len) — no float. Exact-content
+  // families collapse to representatives first (C1's trick), so
+  // identical texts never reach the DP. Output = every audited
+  // candidate with its bound and distance — the oracle equality proves
+  // the bound never lied (a row where bound > lev would diverge).
+  /** The id window `id_a < id_b ≤ id_a + 5` has no equi-key, so a plain
+    * range join plans a nested loop over reps² (quadratic: SURVEY.md's
+    * sf10 probes). [[graft.operators.BoundedOffsetPairs]] instead moves
+    * each rep once, with its UTF-8 bytes and code-point length, and runs
+    * the length test and the DP inside the task: no pair row is
+    * shuffled and no join is planned. Null texts have no length, so the
+    * oracle pairs none of them.
+    */
   private def dedupEditDistance(s: SparkSession, dir: String): DataFrame = {
-    val reps = docs(s, dir).groupBy(col("text"))
+    import s.implicits._
+    val reps = docs(s, dir).filter(col("text").isNotNull).groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-    // Pair skeleton as an offset-explode EQUI-join (C4's r2 lesson,
-    // re-learned by the r8 sf10 probe: the previous pure-range
-    // predicate `id_a < id_b <= id_a + 5` has no equi-key, so Spark
-    // runs a nested loop over reps² — 19 s at sf1 but 1274 s (67×)
-    // at sf10, quadratic by construction). Exploding off ∈ 1..5 on
-    // the narrow (id, len) frame makes candidate generation a hash
-    // join: 5n skeleton rows, lengths filter first, and only pairs
-    // that pass the cheap bound attach text payloads (two keyed
-    // joins) and pay the DP.
-    val idsLens = reps.select(col("doc_id"), col("len"))
-    val skel = idsLens
-      .select(col("doc_id").as("id_a"), col("len").as("len_a"),
-        explode(expr("sequence(1, 5)")).as("off"))
-      .withColumn("id_b", col("id_a") + col("off"))
-      .join(idsLens.select(col("doc_id").as("id_b"), col("len").as("len_b")),
-        Seq("id_b"))
-      .withColumn("bound", abs(col("len_a") - col("len_b")))
-      .filter(col("bound") * 5 <= lit(2) * greatest(col("len_a"), col("len_b")))
-    skel
-      .join(reps.select(col("doc_id").as("id_a"), col("text").as("ta")),
-        Seq("id_a"))
-      .join(reps.select(col("doc_id").as("id_b"), col("text").as("tb")),
-        Seq("id_b"))
-      // THRESHOLDED DP: the decision never needs distances beyond the
-      // cap, and Spark's banded levenshtein(l, r, k) computes only a
-      // 2k-wide diagonal — O(k·len) instead of O(len²), the second
-      // pruning tier under the length bound. The cap is decision-tight:
-      // near-dup needs lev ≤ max(len)/5 ≤ 144 for any ≤720-char text,
-      // so nothing the gate cares about is lost (measured 12.6 → 5.4 s
-      // at sf0.1). Beyond-cap pairs report -1 = "provably not near".
-      .withColumn("lev", levenshtein(col("ta"), col("tb"), 144))
+      .select(col("doc_id"), col("text").cast("binary").as("utf8"),
+        length(col("text")).as("len"))
+    BoundedOffsetPairs[(Array[Byte], Int), (Long, Long, Int, Int, Int)](reps, 5) {
+      _.collect { case (idA, (a, lenA), idB, (b, lenB))
+          if math.abs(lenA - lenB) * 5L <= 2L * math.max(lenA, lenB) =>
+        // THRESHOLDED DP: the decision never needs distances beyond the
+        // cap, and the banded levenshtein (the method Spark's
+        // `levenshtein(l, r, k)` calls) computes only a 2k-wide diagonal,
+        // O(k·len) instead of O(len²). The cap is decision-tight:
+        // near-dup needs lev ≤ max(len)/5 ≤ 144 for any ≤720-char text
+        // (12.6 → 5.4 s at sf0.1, SURVEY.md C15). Beyond-cap pairs
+        // report -1 = "provably not near".
+        (idA, idB, lenA, lenB,
+          UTF8String.fromBytes(a).levenshteinDistance(UTF8String.fromBytes(b), 144))
+      }
+    }.toDF("id_a", "id_b", "len_a", "len_b", "lev")
       .select(col("id_a"), col("id_b"),
         col("len_a").cast("long").as("len_a"),
         col("len_b").cast("long").as("len_b"),
-        col("bound").cast("long").as("bound"),
+        abs(col("len_a") - col("len_b")).cast("long").as("bound"),
         col("lev").cast("long").as("lev"),
         (col("lev") >= 0 &&
           col("lev") * 5 <= greatest(col("len_a"), col("len_b")))

@@ -132,13 +132,13 @@ final class ArchetypeStore(
 
   /** Bulk spawn: `df` must carry `entity_id` plus the prefixed component
     * columns of `metas`. The distributed path — no driver loop. `df`
-    * holds at most one row per `entity_id` (see [[upsert]]).
+    * holds at most one row per `entity_id` (see [[upsert]]). Appends as
+    * [[upsertAt]] at `step` does, and stamps the run scope and
+    * `is_active` in the same one projection.
     */
   def spawnBatch(metas: Seq[ComponentMeta], df: DataFrame, step: Long): Unit =
-    upsertAt(ensureTable(metas), df
-      .withColumn("simulation", lit(simulation))
-      .withColumn("run", lit(run))
-      .withColumn("is_active", lit(true)), step)
+    appendVersioned(ensureTable(metas), df, Map("simulation" -> lit(simulation),
+      "run" -> lit(run), "is_active" -> lit(true), "step" -> lit(step)), Some(Set(step)))
 
   /** Soft-delete: mark is_active=false for this entity at `step` in
     * every archetype where it is live there (reference:
@@ -231,7 +231,7 @@ final class ArchetypeStore(
     // table, so despawning first is safe). The movers hold one row per
     // entity at steps of the source log, so they are tagged with those.
     despawnWhere(fromHash, cond)
-    appendVersioned(toHash, out, None, stepsOf(source.parts))
+    appendVersioned(toHash, out, Map.empty, stepsOf(source.parts))
   }
 
   /** Remove ONE component from ONE entity (reference:
@@ -313,7 +313,7 @@ final class ArchetypeStore(
     * takes this append and resolves it through the latest-wins window;
     * [[upsertAt]] keeps reads at other steps window-free.
     */
-  def upsert(hash: String, df: DataFrame): Unit = appendVersioned(hash, df, None, None)
+  def upsert(hash: String, df: DataFrame): Unit = appendVersioned(hash, df, Map.empty, None)
 
   /** [[upsert]] of one step's frame: every row of `df` is stamped
     * `step`, and only reads at `step` take the append. While the
@@ -321,22 +321,23 @@ final class ArchetypeStore(
     * those reads skip the latest-wins window.
     */
   def upsertAt(hash: String, df: DataFrame, step: Long): Unit =
-    appendVersioned(hash, df, Some(step), Some(Set(step)))
+    appendVersioned(hash, df, Map("step" -> lit(step)), Some(Set(step)))
 
-  /** Stamps `step` (when given) and a fresh `_v`, and orders the columns
-    * as the archetype's schema and casts any column of another type
-    * (nullability aside, as a union compares them) to it, in one
-    * projection: every analysed Dataset costs the driver a pass of the
-    * analyzer. A column that cannot be cast fails here, at the append,
-    * not at the log's next whole read. `steps` tags the part.
+  /** Stamps the `stamps` columns (literals of the schema's types) and a
+    * fresh `_v`, and orders the columns as the archetype's schema and
+    * casts any other column of another type (nullability aside, as a
+    * union compares them) to it, in one projection: every analysed
+    * Dataset costs the driver a pass of the analyzer. A column that
+    * cannot be cast fails here, at the append, not at the log's next
+    * whole read. `steps` tags the part.
     */
-  private def appendVersioned(hash: String, df: DataFrame, step: Option[Long],
+  private def appendVersioned(hash: String, df: DataFrame, stamps: Map[String, Column],
       steps: Option[Set[Long]]): Unit = {
     flush()
     val v = commitCounter.incrementAndGet()
     val given = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
     val prepared = df.select(Archetype.schemaOf(sigByHash(hash)).fields.toIndexedSeq.map {
-      case f if f.name == "step" && step.isDefined => lit(step.get).as("step")
+      case f if stamps.contains(f.name) => stamps(f.name).as(f.name)
       case f if given.get(f.name).contains(f.dataType.catalogString) => col(f.name)
       case f => col(f.name).cast(f.dataType).as(f.name)
     } :+ lit(v).as(VersionCol): _*)

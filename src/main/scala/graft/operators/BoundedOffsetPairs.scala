@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** Every pair of rows whose ids are at most `maxOff` apart, handed to a
   * per-partition function without ever becoming a shuffled row: the
-  * skeleton of the exact bounded-offset near-dup tier (C4/C8, C14).
+  * skeleton of the exact bounded-offset near-dup tier (C4/C8, C14, C15).
   *
   * Ids fall into 2¹⁴-id buckets, and each bucket's first `maxOff` ids
   * are copied, flagged, into the previous bucket, so every in-window

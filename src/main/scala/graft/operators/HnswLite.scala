@@ -44,13 +44,6 @@ object HnswLite {
   private def d2(v: Column, c: Column): Column =
     VectorOps.dot(v, v) - lit(2.0) * VectorOps.dot(v, c) + VectorOps.dot(c, c)
 
-  /** Phase timing, printed only when SPARK_GRAFT_HNSW_DEBUG is set. */
-  private def timed[A](name: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_HNSW_DEBUG")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[hnsw] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
-
   /** Nearest-`b` parents from a SMALL candidate set, shuffle-free:
     * candidates ride along as one broadcast array row, each node sorts
     * (dist², pid) structs and explodes its best `b` — the
@@ -128,10 +121,8 @@ object HnswLite {
     // levels(0) = L1 … levels(m-1) = top; nested by hash order (the
     // deterministic "level draw")
     val levels = sizes.map { sz =>
-      prev = timed(s"level build (size $sz)") {
-        prev.orderBy(xxhash64(col("cid")), col("cid"))
-          .limit(sz.toInt).localCheckpoint(eager = true)
-      }
+      prev = prev.orderBy(xxhash64(col("cid")), col("cid"))
+        .limit(sz.toInt).localCheckpoint(eager = true)
       prev
     }.toArray
     val m = levels.length
@@ -157,19 +148,15 @@ object HnswLite {
       // the per-row top-scoring expression re-evaluates inside the
       // descent shuffle and the whole route re-runs wherever the edge
       // frame is consumed unmaterialized (measured 3× on the sf1 probe)
-      var beam = timed("  route: entry beamFromSmall") {
-        beamFromSmall(nodes, topCand, routeBeam)
-          .localCheckpoint(eager = true)
-      }
+      var beam = beamFromSmall(nodes, topCand, routeBeam)
+        .localCheckpoint(eager = true)
       // edge frames are level-sized (sizes(jj) rows): broadcast while
       // they fit comfortably (≤ 2^18 rows ≈ 140 MB of doubles)
       for (jj <- m - 2 to target by -1)
         beam = descend(beam, edges(jj), if (jj == target) 1 else routeBeam,
           nodes, smallEdges = sizes(jj) <= QueryShape.BroadcastRowLimit)
-      val assigned = timed("  route: descend chain") {
-        beam.select(col("nid"), col("nv"), col("pid"))
-          .localCheckpoint(eager = true)
-      }
+      val assigned = beam.select(col("nid"), col("nv"), col("pid"))
+        .localCheckpoint(eager = true)
       val stranded = nodes.join(assigned.select(col("nid")), Seq("nid"), "leftanti")
       val rescued = IvfIndex.assignOne(stranded, levels(target)
           .select(col("cid"), col("cv")), "nid", "nv")
@@ -182,18 +169,14 @@ object HnswLite {
     val edges = new Array[DataFrame](math.max(m - 1, 0))
     for (j <- m - 2 to 0 by -1) {
       val child = levels(j).select(col("cid").as("nid"), col("cv").as("nv"))
-      edges(j) = timed(s"edges($j) route (${sizes(j)} nodes)") {
-        route(child, sizes(j), j + 1, edges)
-          .toDF("cid", "cv", "parent")
-          .localCheckpoint(eager = true)
-      }
-    }
-    val corpusEdges = timed(s"corpus route ($n nodes)") {
-      route(
-          base.select(col("cid").as("nid"), col("cv").as("nv")), n, 0, edges)
-        .toDF("nid", "nv", "parent1")
+      edges(j) = route(child, sizes(j), j + 1, edges)
+        .toDF("cid", "cv", "parent")
         .localCheckpoint(eager = true)
     }
+    val corpusEdges = route(
+        base.select(col("cid").as("nid"), col("cv").as("nv")), n, 0, edges)
+      .toDF("nid", "nv", "parent1")
+      .localCheckpoint(eager = true)
 
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
     // top: score every pivot (tiny) — the hierarchy's entry points

@@ -58,10 +58,10 @@ object IvfIndex {
     * struct ordering IS the (distance, centroid-id) tiebreak the
     * window path used. The n·k intermediate-row explode + hash
     * shuffle of the window argmin (the cost that shows at 10⁶ vectors
-    * per Lloyd iteration / list build) disappears. Measured
-    * (AnnAssignBench, 10⁶×16d): k=8 parity locally (0.7 vs 0.6 s —
-    * the shuffle is memory-local on one box), k=64 argmin 3.8 s vs
-    * window 4.7 s; on a cluster the eliminated shuffle is the
+    * per Lloyd iteration / list build) disappears; IvfSpec checks that
+    * both argmins assign alike. Measured (SURVEY.md, 10⁶×16d): k=8
+    * parity locally (0.7 vs 0.6 s — the shuffle is memory-local on
+    * one box), k=64 argmin 3.8 s vs window 4.7 s; on a cluster the eliminated shuffle is the
     * difference between k·corpus rows on the wire per Lloyd iteration
     * and none.
     */

@@ -236,15 +236,9 @@ case class AsOfJoinExec(
   // as their own codegen stages, exactly the pre-codegen behavior).
   // ------------------------------------------------------------------
 
-  private lazy val codegenPath: Boolean =
+  override lazy val supportCodegen: Boolean =
     longGetter(leftTime.dataType).isDefined &&
       leftKeys.forall(k => codegenKeyType(k.dataType))
-
-  // GRAFT_ASOF_INTERPRETED disables only this operator's codegen —
-  // the measured A/B hook (spark.sql.codegen.wholeStage would turn
-  // off every operator's, which isn't the comparison that matters)
-  override def supportCodegen: Boolean =
-    codegenPath && !sys.env.contains("GRAFT_ASOF_INTERPRETED")
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     left.execute() :: right.execute() :: Nil

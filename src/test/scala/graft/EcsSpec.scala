@@ -984,6 +984,24 @@ class EcsSpec extends SparkSpec {
     assert(history.count() == 2L * (k + 1))
   }
 
+  test("a spawnBatch part stamps its columns in one Project above the caller's plan") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    val w = World.make(spark, "sim_test", "run_one_project", optimizeInterval = 0)
+    val caller = movers(Seq(1L, 2L), 1.0)
+    w.spawnBatch(PosVel, caller)
+    val callerPlan = GraftBridge.analyzedPlan(caller)
+    /** The nodes above the caller's plan, root first. */
+    def above(p: LogicalPlan): Option[List[LogicalPlan]] =
+      if (p.fastEquals(callerPlan)) Some(Nil)
+      else p.children.iterator.flatMap(above).nextOption().map(p :: _)
+    val history = w.getHistory(PosVel).values.head
+    val stacked = above(GraftBridge.analyzedPlan(history))
+      .map(_.reverse.takeWhile(_.isInstanceOf[Project]).size)
+    assert(stacked.contains(1), s"Projects directly on the caller's plan: $stacked")
+    assert(history.count() == 2L)
+  }
+
   test("compaction snapshots are stored serialized") {
     import org.apache.spark.sql.GraftBridge
     /** Storage levels of the checkpointed RDDs a read scans. */

@@ -186,4 +186,29 @@ class IvfSpec extends SparkSpec {
       v1.zip(v2).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9) }
     }
   }
+
+  test("the broadcast argmin assigns every vector as the window argmin does, ties to the lower id") {
+    // planted clusters plus 200 unclustered vectors; the centroids are
+    // one member per cluster, and cid 1000 repeats cid 3's vector, a
+    // tie the (distance, cid) order breaks toward cid 3
+    val e = clustered.unionByName(
+      (200L until 400L).map(i => (i, randVec(i + 7000L))).toDF("vec_id", "v"))
+    val members = e.filter(col("vec_id") < 200 && col("vec_id") % 25 === 3)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cent = members.unionByName(
+      members.filter(col("cid") === 3).withColumn("cid", lit(1000L)))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
+    val window = e.crossJoin(broadcast(cent))
+      .withColumn("d2", VectorOps.dot(col("v"), col("v")) -
+        lit(2.0) * VectorOps.dot(col("v"), col("cv")) + VectorOps.dot(col("cv"), col("cv")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select("vec_id", "cid").as[(Long, Long)].collect().toMap
+    val argmin = IvfIndex.assignOne(e, cent, "vec_id", "v")
+      .select("vec_id", "cid").as[(Long, Long)].collect().toMap
+    assert(argmin.size == 400)
+    assert(argmin == window)
+    assert(argmin(3L) == 3L && argmin.values.toSet.size > 2)
+  }
 }
